@@ -13,14 +13,20 @@ import graft.store.TableStore
   * served through Spark's V1Scan fallback (the JDBC-source pattern): the
   * relation builds the effective-rows DataFrame via
   * [[TableStore#readFiles]] — stats/bucket file pruning plus the broadcast
-  * DV anti-join — and hands Spark its internal-row RDD. The scan loses
-  * whole-stage fusion with the parent plan (one extra exchange-free
-  * pipeline break), which is the deliberate MOR trade: reads pay a little
-  * until [[TableStore#purgeDeletes]]/[[TableStore#compact]] folds the
-  * deletes in and the table returns to the byte-stock DSv2 path. Filters
-  * all stay post-scan (same conservative contract as the stats-pruning
-  * builder); `rowFilter` only pre-drops rows the post-scan Filter would
-  * drop anyway, cutting the fallback's conversion volume. */
+  * delete-vector and equality-delete anti-joins — and hands Spark its
+  * internal-row RDD. `buildScan` runs during physical planning and calls
+  * `toRdd`, so the masks are MATERIALIZED AT PLAN TIME: their sub-plans
+  * execute on every plan of every query. Small masks (under the broadcast
+  * gate) are therefore memoized per delete-file set
+  * ([[TableStore.maskMemo]]): the first plan over a delete set reads its
+  * files, later plans broadcast the memoized rows and read no delete file.
+  * The scan also loses whole-stage fusion with the parent plan (one extra
+  * exchange-free pipeline break) until
+  * [[TableStore#purgeDeletes]]/[[TableStore#compact]] folds the deletes in
+  * and the table returns to the byte-stock DSv2 path — the deliberate MOR
+  * trade. Filters all stay post-scan (same conservative contract as the
+  * stats-pruning builder); `rowFilter` only pre-drops rows the post-scan
+  * Filter would drop anyway, cutting the fallback's conversion volume. */
 private[catalog] final class DvV1Scan(store: TableStore,
     m: TableStore.Manifest, name: String, prunedSchema: StructType,
     files: () => Seq[String],

@@ -35,8 +35,9 @@ import graft.store.TableStore
   * bucket a match lands in, so on a 100 TB continuously-merged table this
   * is the difference between a KB-scale mask+append per batch and multi-GB
   * bucket rewrites (the same trade [[TableStore.upsertMor]] measures at
-  * 438×/385× in tools/DvStats). The staged delta is written twice (staging
-  * then final layout) — 2× the CHANGED rows, never table volume, the same
+  * 438×/385×, recorded in NOTES.md "Merge-on-read deletes" and "Merge-on-
+  * read CDC loop"). The staged delta is written twice (staging then final
+  * layout) — 2× the CHANGED rows, never table volume, the same
   * discipline the COW path applies to its replacement groups. The read tax
   * until [[TableStore.purgeDeletes]] is the standard MOR anti-join. */
 final class GraftDeltaOperationBuilder(store: TableStore, version: Long,

@@ -724,15 +724,7 @@ class TableStore(val spark: SparkSession, val root: String,
         .groupBy(r => if (r.cols.nonEmpty) r.cols else m.bucketKeys)
         .toSeq.sortBy(_._1.mkString(","))
       groups.foldLeft(withV) { case (df, (cols, refs)) =>
-        val dels = refs.map { r =>
-          spark.read.schema(eqKeySchema(m, cols)).parquet(r.path)
-            .withColumn("_eq_since", lit(r.since))
-        }.reduce(_ unionByName _)
-          .groupBy(cols.map(col): _*)
-          .agg(max("_eq_since").as("_eq_since"))
-        val probe =
-          if (refs.map(_.bytes).sum <= dvBroadcastThreshold) broadcast(dels)
-          else dels
+        val probe = eqProbe(m, cols, refs)
         val cond = cols.map(k => df(k) === probe(k)).reduce(_ && _) &&
           df("_g_snapv") < probe("_eq_since")
         df.join(probe, cond, "left_anti")
@@ -785,6 +777,79 @@ class TableStore(val spark: SparkSession, val root: String,
     spark.conf.getOption("spark.graft.dv.broadcastThreshold")
       .map(_.toLong).getOrElse(64L << 20)
 
+  /** The keys of the equality deletes `refs` over `cols`, collapsed to
+    * `max(since)` per key — the probe side of [[eqFilter]] and of the
+    * narrow changelog's newly-masked join. */
+  private def eqProbe(m: Manifest, cols: Seq[String],
+      refs: Seq[EqRef]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit, max}
+    val readSchema = eqKeySchema(m, cols)
+    maskProbe(
+      s"eq|${cols.mkString(",")}|${readSchema.catalogString}|" +
+        refs.map(r => s"${r.path}:${r.since}").sorted.mkString(","),
+      refs.map(_.bytes).sum, refs.map(_.rows).sum,
+      refs.map { r =>
+        spark.read.schema(readSchema).parquet(r.path)
+          .withColumn("_eq_since", lit(r.since))
+      }.reduce(_ unionByName _)
+        .groupBy(cols.map(col): _*)
+        .agg(max("_eq_since").as("_eq_since")))
+  }
+
+  /** The `(file_path, pos)` entries of the delete vectors `refs` — the
+    * probe side of [[dvFilter]] and of the narrow changelog's
+    * newly-masked join. */
+  private def dvProbe(refs: Seq[DvRef]): DataFrame =
+    maskProbe(
+      s"dv|${TableStore.DvSchema.catalogString}|" +
+        refs.map(_.path).sorted.mkString(","),
+      refs.map(_.bytes).sum, refs.map(_.rows).sum,
+      spark.read.schema(TableStore.DvSchema).parquet(refs.map(_.path): _*))
+
+  /** The probe side of a mask join ([[eqProbe]], [[dvProbe]]) over
+    * the delete set `dels` reads. Delete files are write-once, and
+    * `DvV1Scan.buildScan` materializes the mask at PLAN time: read from
+    * the files, every catalog query over a masked snapshot pays a Spark
+    * job (plus the equality side's shuffle) for the same rows. A set
+    * under [[dvBroadcastThreshold]] and [[TableStore.MaskMemoMaxRows]]
+    * metadata rows is therefore collected ONCE into a process-wide memo
+    * ([[TableStore.maskMemo]]) and broadcast from a local relation of
+    * those rows — the same rows the broadcast pulls to the driver on every
+    * query anyway. Above the byte gate the shuffled join is unchanged.
+    * `key` names the delete set (mask kind, key columns, read schema,
+    * sorted files with each equality ref's `since`); the memo
+    * follows the manifest memo's conf and invalidation ([[manifest]],
+    * [[TableStore.invalidateMeta]]). Every mask built from the files
+    * rather than the memo counts in [[TableStore.maskLoads]]. */
+  private def maskProbe(key: String, bytes: Long, rows: Long,
+      dels: => DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.broadcast
+    if (bytes > dvBroadcastThreshold) {
+      TableStore.maskLoads.incrementAndGet()
+      return dels
+    }
+    val memoOn = rows <= TableStore.MaskMemoMaxRows &&
+      spark.conf.getOption("spark.graft.meta.manifestCache")
+        .forall(_.toBoolean)
+    if (!memoOn) {
+      TableStore.maskLoads.incrementAndGet()
+      return broadcast(dels)
+    }
+    val mKey = (epochMemoKey, key)
+    val rel = Option(TableStore.maskMemo.get(mKey)).getOrElse {
+      TableStore.maskLoads.incrementAndGet()
+      val d = dels
+      val l = org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+        .fromExternalRows(org.apache.spark.sql.catalyst.types.DataTypeUtils
+          .toAttributes(d.schema), d.collect().toSeq)
+      TableStore.maskMemoPut(mKey, l)
+      l
+    }
+    // fresh attribute ids per use: one query may mask the same set twice
+    broadcast(org.apache.spark.sql.graftbridge.DatasetBridge
+      .ofRows(spark, rel.newInstance()))
+  }
+
   /** Effective-rows filter for delete-vector snapshots: drop every
     * `(file, pos)` the DV set names, via an anti-join on the parquet
     * metadata columns. Positions are file-absolute (parquet row index), so
@@ -798,11 +863,7 @@ class TableStore(val spark: SparkSession, val root: String,
   private def dvFilter(tagged: DataFrame, m: Manifest): DataFrame =
     if (!m.hasDvs) tagged
     else {
-      import org.apache.spark.sql.functions.broadcast
-      val dv = dvEntries(m)
-      val probe =
-        if (m.dvRefs.map(_.bytes).sum <= dvBroadcastThreshold) broadcast(dv)
-        else dv
+      val probe = dvProbe(m.dvRefs)
       tagged.join(probe,
         tagged("_g_file") === probe("file_path") && tagged("_g_pos") === probe("pos"),
         "left_anti")
@@ -1119,16 +1180,9 @@ class TableStore(val spark: SparkSession, val root: String,
     val newlyMasked =
       if (newEq.nonEmpty) {
         // new delete keys collapsed to max(since) per key — the read-side
-        // eqFilter's own collapse — broadcast under the same byte gate
+        // eqFilter's own probe
         val cols = colSets.head
-        val dels = newEq.map { r =>
-          spark.read.schema(eqKeySchema(tm, cols)).parquet(r.path)
-            .withColumn("_eq_since", lit(r.since))
-        }.reduce(_ unionByName _)
-          .groupBy(cols.map(col): _*).agg(max("_eq_since").as("_eq_since"))
-        val probe =
-          if (newEq.map(_.bytes).sum <= dvBroadcastThreshold) broadcast(dels)
-          else dels
+        val probe = eqProbe(tm, cols, newEq)
         val withV = tagged.withColumn("_g_snapv",
           regexp_extract(col("_g_file"), "/snap-(\\d+)-", 1).cast("long"))
         val cond = cols.map(k => withV(k) === probe(k)).reduce(_ && _) &&
@@ -1136,11 +1190,7 @@ class TableStore(val spark: SparkSession, val root: String,
         withV.join(probe, cond, "left_semi").drop("_g_snapv")
       } else {
         // new DV entries are exact (file, pos) row addresses
-        val dv = spark.read.schema(TableStore.DvSchema)
-          .parquet(newDv.map(_.path): _*)
-        val probe =
-          if (newDv.map(_.bytes).sum <= dvBroadcastThreshold) broadcast(dv)
-          else dv
+        val probe = dvProbe(newDv)
         tagged.join(probe,
           tagged("_g_file") === probe("file_path") &&
             tagged("_g_pos") === probe("pos"), "left_semi")
@@ -4827,13 +4877,38 @@ object TableStore {
     (String, Long, String),
     Seq[org.apache.spark.sql.graftbridge.StatsScanBridge.FileRef]]
 
+  /** Process-wide delete-mask memo ([[TableStore#maskProbe]]):
+    * (epochMemoKey, delete-set key) → the mask rows as a local relation.
+    * Delete files are write-once, so the key identifies the rows. Sets
+    * above [[MaskMemoMaxRows]] metadata rows never enter; the memo is
+    * cleared wholesale past 64 entries or [[MaskMemoMaxRows]] held rows,
+    * and invalidated with the manifest memo. */
+  private[graft] val maskMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, String),
+    org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** Row budget of [[maskMemo]], per entry and in total. */
+  private[graft] val MaskMemoMaxRows = 250000L
+
+  private[graft] def maskMemoPut(k: (String, String),
+      rel: org.apache.spark.sql.catalyst.plans.logical.LocalRelation): Unit = {
+    import scala.jdk.CollectionConverters._
+    val n = rel.data.size.toLong
+    if (maskMemo.size > 64 ||
+        maskMemo.values.asScala.map(_.data.size.toLong).sum + n >
+          MaskMemoMaxRows) maskMemo.clear()
+    if (n <= MaskMemoMaxRows) maskMemo.put(k, rel)
+    ()
+  }
+
   /** Drop every process-wide metadata memo entry under `memoKeyPrefix` —
-    * the manifest cache, the span memos, and the derivative-registry
-    * snapshots. Called by every path that DELETES or RENUMBERS committed
-    * metadata, where a later re-creation could reuse a (store, version)
-    * key with different content: DROP/RENAME TABLE (the bench/test reality
-    * of drop-and-recreate at one root), MaterializedJoin/Agg/SecondaryIndex
-    * drops, dropBranch (+ recreate restarts branch numbering), rebase and
+    * the manifest cache, the span memos, the delete masks, and the
+    * derivative-registry snapshots. Called by every path that DELETES or
+    * RENUMBERS committed metadata, where a later re-creation could reuse a
+    * (store, version) key with different content: DROP/RENAME TABLE (the
+    * bench/test reality of drop-and-recreate at one root),
+    * MaterializedJoin/Agg/SecondaryIndex drops, dropBranch (+ recreate
+    * restarts branch numbering), rebase and
     * its crash repair (rewrite branch manifests in place), and snapshot
     * expiry (a cached manifest over vacuumed data must fail loudly, not
     * serve). Prefix matching stops at a path or branch separator so
@@ -4849,6 +4924,7 @@ object TableStore {
     registryDropIf(k => hit(k._2))
     classifyMemo.keySet.removeIf(k => hit(k._1))
     pruneMemo.keySet.removeIf(k => hit(k._1))
+    maskMemo.keySet.removeIf(k => hit(k._1))
   }
 
   /** Process-wide derivative-REGISTRY snapshots (join/agg-view and index
@@ -4943,6 +5019,13 @@ object TableStore {
   /** Manifest-load counter — test instrumentation for the memo contract
     * (repeated stale planning must not re-walk span manifests). */
   private[graft] val manifestLoads =
+    new java.util.concurrent.atomic.AtomicLong
+
+  /** Delete-mask load counter — test instrumentation for the mask memo
+    * contract (repeated planning over one delete set must not re-read its
+    * files): counts every mask [[TableStore#maskProbe]] builds from
+    * delete files rather than from [[maskMemo]]. */
+  private[graft] val maskLoads =
     new java.util.concurrent.atomic.AtomicLong
 
   /** Is every commit in `(a, b]` marked content-preserving (compaction /

@@ -526,7 +526,7 @@ object StreamingOps {
     * statistics the loop already computes, instead of a global session
     * conf (VERDICT r8 missing #3: the engine knows per batch what the
     * right path is; a fixed mode is exactly the 1,500,030-record mistake
-    * tools/EqStats measures). The decision:
+    * NOTES.md "Round 8: equality deletes" records). The decision:
     *
     *  - schema drift / layout mismatch / bootstrap → COW (the fallback
     *    every mode shares — evolution owns a rewrite anyway);
