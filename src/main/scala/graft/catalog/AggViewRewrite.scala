@@ -63,20 +63,11 @@ class AggViewRewriteRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!conf.getConfString("spark.graft.agg.rewrite", "true").toBoolean)
       return plan
-    val debug =
-      conf.getConfString("spark.graft.agg.rewrite.debug", "false").toBoolean
     plan.transformUp {
       case agg: Aggregate =>
         try rewrite(agg).getOrElse(agg)
         catch { case e: Exception =>
-          logWarning(s"agg-view rewrite declined on error: $e")
-          if (debug) {
-            // scalastyle:off println
-            System.err.println(s"[agg-rewrite] declined on error: $e")
-            e.printStackTrace()
-            // scalastyle:on println
-          }
-          agg
+          logWarning(s"agg-view rewrite declined on error: $e"); agg
         }
     }
   }
@@ -671,33 +662,15 @@ object AggViewRewrite {
     * (`spark.sql.extensions` is fixed at session construction; the
     * catalog, like the rest of graft, attaches at runtime). */
   def install(spark: SparkSession): Unit = spark.experimental.synchronized {
-    if (!spark.experimental.extraOptimizations
-        .exists(_.isInstanceOf[MonotoneRangeRewriteRule]))
-      spark.experimental.extraOptimizations =
-        new MonotoneRangeRewriteRule +: spark.experimental.extraOptimizations
-    if (!spark.experimental.extraOptimizations
-        .exists(_.isInstanceOf[AggViewRewriteRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ new AggViewRewriteRule
-    if (!spark.experimental.extraOptimizations
-        .exists(_.isInstanceOf[JoinViewRewriteRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ new JoinViewRewriteRule
-    if (!spark.experimental.extraOptimizations
-        .exists(_.isInstanceOf[VectorTopKRewriteRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ new VectorTopKRewriteRule
-    if (!spark.experimental.extraOptimizations
-        .exists(_.isInstanceOf[HybridMetaAggRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ new HybridMetaAggRule
-    if (!spark.experimental.extraOptimizations
-        .exists(_.isInstanceOf[NdvServeRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ new NdvServeRule
-    if (!spark.experimental.extraOptimizations
-        .exists(_.isInstanceOf[TopKMetaPruneRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ new TopKMetaPruneRule
+    val exp = spark.experimental
+    def absent(r: Rule[LogicalPlan]): Boolean =
+      !exp.extraOptimizations.exists(r.getClass.isInstance)
+    // the range rule runs first: the stats rules read the ranges it writes
+    val first = new MonotoneRangeRewriteRule
+    if (absent(first)) exp.extraOptimizations = first +: exp.extraOptimizations
+    Seq(new AggViewRewriteRule, new JoinViewRewriteRule,
+      new VectorTopKRewriteRule, new HybridMetaAggRule, new NdvServeRule,
+      new TopKMetaPruneRule).filter(absent).foreach { r =>
+      exp.extraOptimizations = exp.extraOptimizations :+ r }
   }
 }

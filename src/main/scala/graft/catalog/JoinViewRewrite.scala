@@ -77,24 +77,19 @@ class JoinViewRewriteRule extends Rule[LogicalPlan] {
       // survives for the condition even when unselected), which under
       // LEFT OUTER can be unmappable while the selected columns map fine
       case p @ Project(list, j: Join) =>
-        dbg(s"considering ${j.joinType} join (projected)")
+        logDebug(s"considering ${j.joinType} join (projected)")
         try rewrite(j, list, p.output).getOrElse(p)
         catch { case e: Exception =>
           logWarning(s"join-view rewrite declined on error: $e"); p
         }
       case j: Join =>
-        dbg(s"considering ${j.joinType} join")
+        logDebug(s"considering ${j.joinType} join")
         try rewrite(j, j.output, j.output).getOrElse(j)
         catch { case e: Exception =>
           logWarning(s"join-view rewrite declined on error: $e"); j
         }
     }
   }
-
-  private def dbg(msg: => String): Unit =
-    if (conf.getConfString("spark.graft.agg.rewrite.debug", "false")
-        .toBoolean)
-      logWarning(s"[join-rewrite] $msg")
 
   /** One peeled scan side of the join chain. */
   private case class Side(rel: DataSourceV2ScanRelation,
@@ -159,18 +154,18 @@ class JoinViewRewriteRule extends Rule[LogicalPlan] {
           case Some((Left(info), conds, subst)) =>
             Left((info, conds, subst))
           case _ =>
-            dbg(s"fact side does not peel: ${factPlan.nodeName}")
+            logDebug(s"fact side does not peel: ${factPlan.nodeName}")
             return None
         }
       }
     val legs: Seq[Side] = legPlans.map(lp => peelSide(lp._1)) match {
       case ss if ss.forall(_.isDefined) => ss.map(_.get)
-      case _ => dbg("a dim side does not peel"); return None
+      case _ => logDebug("a dim side does not peel"); return None
     }
     val lStore = factE.fold(_._1.viewStore, _.table.graftStore)
     if (lStore.branch.nonEmpty ||
         legs.exists(_.table.graftStore.branch.nonEmpty)) {
-      dbg("branch store"); return None
+      logDebug("branch store"); return None
     }
     val lm = factE.fold(t => t._1.viewStore.manifest(t._1.viewVersion),
       _.table.graftManifest)
@@ -192,11 +187,11 @@ class JoinViewRewriteRule extends Rule[LogicalPlan] {
     val factConds: Seq[Expression] = factE.fold(_._2, _.conds)
     if (factE.exists(f => !f.rel.scan.readSchema().fieldNames
         .forall(lm.schema.fieldNames.toSet))) {
-      dbg(s"fact readSchema outside base"); return None
+      logDebug(s"fact readSchema outside base"); return None
     }
     if (legs.exists(s => !s.rel.scan.readSchema().fieldNames
         .forall(s.table.graftManifest.schema.fieldNames.toSet))) {
-      dbg(s"a dim readSchema outside base"); return None
+      logDebug(s"a dim readSchema outside base"); return None
     }
 
     // all join conditions pooled, with every peeled project AND every
@@ -237,10 +232,10 @@ class JoinViewRewriteRule extends Rule[LogicalPlan] {
     }
     if (extras.exists(e => !e.deterministic ||
         e.find(_.isInstanceOf[PlanExpression[_]]).isDefined)) {
-      dbg(s"nondeterministic/subquery extras: $extras"); return None
+      logDebug(s"nondeterministic/subquery extras: $extras"); return None
     }
     if (outer && (extras.nonEmpty || legs.exists(_.conds.nonEmpty))) {
-      dbg(s"left-outer with extras/dim-side filters"); return None
+      logDebug(s"left-outer with extras/dim-side filters"); return None
     }
 
     val res = conf.resolver
@@ -316,7 +311,7 @@ class JoinViewRewriteRule extends Rule[LogicalPlan] {
           val t = MaterializedJoin.storedPlusDeltaJoin(lStore, vm,
             info.pre, info.post, info.keys, toRs,
             reuseTok)
-          if (t.isEmpty) dbg(s"tail-over-tail: '${vm.name}' declined " +
+          if (t.isEmpty) logDebug(s"tail-over-tail: '${vm.name}' declined " +
             "(drift/expired dim snapshot/off-watermark index)")
           t.flatMap(tl =>
             attempt(vm, legDims, tl.frame, " (tail-over-tail)", Some(tl)))
@@ -380,7 +375,7 @@ class JoinViewRewriteRule extends Rule[LogicalPlan] {
               spanCheap(legs(i).table.graftStore, d.rVersion,
                 legs(i).table.graftManifest)
             }
-          if (!cheap) dbg(s"tail: a span of '${vm.name}' too churned " +
+          if (!cheap) logDebug(s"tail: a span of '${vm.name}' too churned " +
             "(>= rescanFraction)")
           cheap
         }
@@ -392,7 +387,7 @@ class JoinViewRewriteRule extends Rule[LogicalPlan] {
           }.get)
           val t = MaterializedJoin.storedPlusTail(lStore, vm, lm.version,
             toRs, reuseTok)
-          if (t.isEmpty) dbg(s"tail: '${vm.name}' not tail-serveable " +
+          if (t.isEmpty) logDebug(s"tail: '${vm.name}' not tail-serveable " +
             "(drift/expired span/map column/off-watermark index)")
           t.flatMap(tl =>
             attempt(vm, legDims, tl.frame, " (tail union)", Some(tl)))
@@ -491,7 +486,7 @@ class JoinViewRewriteRule extends Rule[LogicalPlan] {
       }
     val viewConds = allConds.map(toView)
     if (viewConds.exists(_.isEmpty)) {
-      dbg(s"cond does not map to view cols: $allConds"); return None
+      logDebug(s"cond does not map to view cols: $allConds"); return None
     }
     // every target expression must land on view columns (subqueries and
     // unmappable attrs decline)
@@ -500,7 +495,7 @@ class JoinViewRewriteRule extends Rule[LogicalPlan] {
       else toView(inner).map(t => ColumnBridge.column(t).as(name))
     }
     if (outCols.exists(_.isEmpty)) {
-      dbg(s"target does not map: $targets"); return None
+      logDebug(s"target does not map: $targets"); return None
     }
 
     // TAIL path: pin the serving contract on the frame's root. The splice

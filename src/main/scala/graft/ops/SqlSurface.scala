@@ -53,67 +53,6 @@ object SqlSurface {
         .map(col): _*)
   }
 
-  /** Run INDEPENDENT fixture steps concurrently (optimization guide §2.6:
-    * Spark's scheduler happily overlaps jobs inside one application —
-    * these steps were only sequential because the driver called them
-    * sequentially, and each leaves most of local[N] idle through its
-    * stage tails). Used ONLY for steps with no mutual dependency: commits
-    * and DML chains against DIFFERENT stores. 2-3 in flight is enough to
-    * back-fill the tail without fighting for executors; the first failed
-    * step rethrows its ORIGINAL cause so require() messages surface
-    * unchanged (the remaining steps are awaited first — no half-finished
-    * commit escapes the fixture). */
-  private def inParallel(s: org.apache.spark.sql.SparkSession)(
-      fs: (() => Unit)*): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(fs.size, 3))
-    try {
-      val futs = fs.map { f =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            org.apache.spark.sql.SparkSession.setActiveSession(s)
-            f()
-          }
-        })
-      }
-      var firstErr: Throwable = null
-      futs.foreach { fut =>
-        try { fut.get(); () }
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            if (firstErr == null) firstErr = Option(e.getCause).getOrElse(e)
-          case e: InterruptedException =>
-            // the barrier's promise holds even under interrupt (ADVICE
-            // r17): no half-finished commit may escape — wait out the
-            // in-flight steps NON-interruptibly, then re-assert the
-            // interrupt for the caller
-            if (firstErr == null) firstErr = e
-            var done = false
-            while (!done) {
-              try { fut.get(); done = true }
-              catch {
-                case _: InterruptedException => ()
-                case _: java.util.concurrent.ExecutionException => done = true
-              }
-            }
-        }
-      }
-      if (firstErr != null) {
-        if (firstErr.isInstanceOf[InterruptedException])
-          Thread.currentThread().interrupt()
-        throw firstErr
-      }
-    } finally {
-      pool.shutdown()
-      // bounded drain: tasks are awaited above, so this returns promptly;
-      // it exists so a future refactor cannot leak running commit threads.
-      // An interrupt here (the flag may be re-asserted above) must not
-      // mask the propagating error — swallow and re-assert.
-      try { pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS); () }
-      catch { case _: InterruptedException => Thread.currentThread().interrupt() }
-    }
-  }
-
   /** The matching DuckDB fact CTE body (no trailing comma). */
   private def liKeyedFactSql(extra: Seq[String] = Nil): String = {
     val extraSel = extra.map(c => s"MAX($c) AS $c,").mkString(" ")
@@ -1955,7 +1894,7 @@ object SqlSurface {
     val fact = new TableStore(s, s"$wh/analytics/li_fact")
     val dim = new TableStore(s, s"$wh/analytics/ord_dim")
     // two independent stores load concurrently (guide §2.6)
-    inParallel(s)(
+    graft.util.Concurrent.run(s)(
       () => { fact.commitBucketed(liKeyedFact(s, d, Seq("l_returnflag")),
         keys = Seq("l_orderkey", "l_linenumber"), numBuckets = 16); () },
       () => { dim.commitBucketed(load(s, d, "orders")
@@ -1970,7 +1909,7 @@ object SqlSurface {
     s.conf.set("spark.graft.delete.mode", "auto")
     // the dim UPDATE→DELETE chain and the fact DELETE touch different
     // stores — run the two chains concurrently (guide §2.6)
-    try inParallel(s)(
+    try graft.util.Concurrent.run(s)(
       () => {
         s.sql(s"UPDATE $cat.analytics.ord_dim SET o_totalprice = " +
           "CAST(o_totalprice + 7 AS DECIMAL(18,2)) WHERE o_orderkey % 10 = 1")
@@ -2015,7 +1954,7 @@ object SqlSurface {
     val fact = new TableStore(s, s"$wh/analytics/li_jr")
     val dim = new TableStore(s, s"$wh/analytics/ord_jr")
     // two independent stores load concurrently (guide §2.6)
-    inParallel(s)(
+    graft.util.Concurrent.run(s)(
       () => { fact.commitBucketed(liKeyedFact(s, d, Seq("l_returnflag")),
         keys = Seq("l_orderkey", "l_linenumber"), numBuckets = 16); () },
       () => { dim.commitBucketed(load(s, d, "orders")
@@ -2067,7 +2006,7 @@ object SqlSurface {
     val fact = new TableStore(s, s"$wh/analytics/li_tl")
     val dim = new TableStore(s, s"$wh/analytics/ord_tl")
     // two independent stores load concurrently (guide §2.6)
-    inParallel(s)(
+    graft.util.Concurrent.run(s)(
       () => { fact.commitBucketed(liKeyedFact(s, d),
         keys = Seq("l_orderkey", "l_linenumber"), numBuckets = 16); () },
       () => { dim.commitBucketed(load(s, d, "orders")
@@ -2148,7 +2087,7 @@ object SqlSurface {
     val fact = new TableStore(s, s"$wh/analytics/li_td")
     val dim = new TableStore(s, s"$wh/analytics/ord_td")
     // two independent stores load concurrently (guide §2.6)
-    inParallel(s)(
+    graft.util.Concurrent.run(s)(
       () => { fact.commitBucketed(liKeyedFact(s, d),
         keys = Seq("l_orderkey", "l_linenumber"), numBuckets = 16); () },
       () => { dim.commitBucketed(load(s, d, "orders")
@@ -2165,7 +2104,7 @@ object SqlSurface {
     // the served result)
     // the fact upsert and the dim upsert→remove chain touch different
     // stores — run the two chains concurrently (guide §2.6)
-    inParallel(s)(
+    graft.util.Concurrent.run(s)(
       () => { fact.upsertEq(fact.readSnapshot()
         .filter(col("l_orderkey") % 997 === 2)
         .withColumn("qty", (col("qty") + lit(5)).cast("decimal(18,2)"))
@@ -2230,7 +2169,7 @@ object SqlSurface {
     val fact = new TableStore(s, s"$wh/analytics/li_sr")
     val dim = new TableStore(s, s"$wh/analytics/ord_sr")
     // two independent stores load concurrently (guide §2.6)
-    inParallel(s)(
+    graft.util.Concurrent.run(s)(
       () => { fact.commitBucketed(
         liKeyedFact(s, d).withColumn("okb", col("l_orderkey") % 97)
           .select(col("l_orderkey"), col("l_linenumber"), col("okb"),
@@ -2290,7 +2229,7 @@ object SqlSurface {
     val ord = new TableStore(s, s"$wh/analytics/ord_m")
     val sup = new TableStore(s, s"$wh/analytics/sup_m")
     // three independent stores load concurrently (guide §2.6)
-    inParallel(s)(
+    graft.util.Concurrent.run(s)(
       () => { fact.commitBucketed(liKeyedFact(s, d, Seq("l_suppkey")),
         keys = Seq("l_orderkey", "l_linenumber"), numBuckets = 16); () },
       () => { ord.commitBucketed(load(s, d, "orders")
@@ -2307,7 +2246,7 @@ object SqlSurface {
       "'o_orderkey;s_suppkey', 'o_orderstatus;s_nationkey', 'inner')")
     s.conf.set("spark.graft.delete.mode", "auto")
     // three independent per-table DML chains run concurrently (guide §2.6)
-    try inParallel(s)(
+    try graft.util.Concurrent.run(s)(
       () => { s.sql(s"UPDATE $cat.analytics.sup_m SET s_nationkey = " +
         "s_nationkey + 100 WHERE s_suppkey % 9 = 2"); () },
       () => {
@@ -2358,7 +2297,7 @@ object SqlSurface {
     val ord = new TableStore(s, s"$wh/analytics/ord_py")
     val cust = new TableStore(s, s"$wh/analytics/cust_py")
     // three independent stores load concurrently (guide §2.6)
-    inParallel(s)(
+    graft.util.Concurrent.run(s)(
       () => { fact.commitBucketed(liKeyedFact(s, d),
         keys = Seq("l_orderkey", "l_linenumber"), numBuckets = 16); () },
       () => { ord.commitBucketed(load(s, d, "orders")
@@ -2379,7 +2318,7 @@ object SqlSurface {
     // customer (the snowflake cascade: those lineitems must swing to the
     // new customer's segment), a customer segment update
     // three independent stores churn concurrently (guide §2.6)
-    inParallel(s)(
+    graft.util.Concurrent.run(s)(
       () => { fact.upsertEq(fact.readSnapshot()
         .filter(col("l_orderkey") % 31 === 2)
         .withColumn("qty", (col("qty") + lit(3)).cast("decimal(18,2)"))
@@ -2432,7 +2371,7 @@ object SqlSurface {
     val ord = new TableStore(s, s"$wh/analytics/ord_pt")
     val cust = new TableStore(s, s"$wh/analytics/cust_pt")
     // three independent stores load concurrently (guide §2.6)
-    inParallel(s)(
+    graft.util.Concurrent.run(s)(
       () => { fact.commitBucketed(liKeyedFact(s, d),
         keys = Seq("l_orderkey", "l_linenumber"), numBuckets = 16); () },
       () => { ord.commitBucketed(load(s, d, "orders")

@@ -331,7 +331,7 @@ object MaterializedAgg {
               (if (minMaxCols.nonEmpty)
                 Map(MmIndexProp -> mmIndexName(name)) else Map.empty))
         })
-      MaterializedJoin.runConcurrent(base.spark, steps)
+      graft.util.Concurrent.run(base.spark)(steps: _*)
       commitView()
       ()
     } catch { case e: Throwable => cleanup(); throw e }

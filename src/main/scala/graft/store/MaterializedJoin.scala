@@ -185,57 +185,6 @@ object MaterializedJoin {
     metas
   }
 
-  /** Run independent store actions concurrently (optimization guide §2.6:
-    * the scheduler overlaps jobs; these were only sequential because the
-    * driver called them sequentially). All actions are awaited; the first
-    * failure rethrows its ORIGINAL cause so require() messages surface
-    * unchanged. */
-  private[store] def runConcurrent(sp: org.apache.spark.sql.SparkSession,
-      fs: Seq[() => Unit]): Unit = {
-    if (fs.size <= 1) { fs.foreach(_()); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(fs.size, 3))
-    try {
-      val futs = fs.map(f => pool.submit(
-        new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            org.apache.spark.sql.SparkSession.setActiveSession(sp)
-            f()
-          }
-        }))
-      var firstErr: Throwable = null
-      futs.foreach { fut =>
-        try { fut.get(); () }
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            if (firstErr == null) firstErr = Option(e.getCause).getOrElse(e)
-          case e: InterruptedException =>
-            // the barrier holds even under interrupt (ADVICE r17): no
-            // half-finished commit escapes — wait out the in-flight steps
-            // non-interruptibly, then re-assert the interrupt
-            if (firstErr == null) firstErr = e
-            var done = false
-            while (!done) {
-              try { fut.get(); done = true }
-              catch {
-                case _: InterruptedException => ()
-                case _: java.util.concurrent.ExecutionException => done = true
-              }
-            }
-        }
-      }
-      if (firstErr != null) {
-        if (firstErr.isInstanceOf[InterruptedException])
-          Thread.currentThread().interrupt()
-        throw firstErr
-      }
-    } finally {
-      pool.shutdown()
-      try { pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS); () }
-      catch { case _: InterruptedException => Thread.currentThread().interrupt() }
-    }
-  }
-
   private def requireMain(st: TableStore, what: String): Unit =
     require(st.branch.isEmpty,
       s"join views are maintained against MAIN $what, not branch " +
@@ -464,7 +413,7 @@ object MaterializedJoin {
                  else Map.empty)
             })
       }
-      runConcurrent(l.spark, dupGates ++ idxBuilds :+ viewStage)
+      graft.util.Concurrent.run(l.spark)(dupGates ++ idxBuilds :+ viewStage: _*)
       // the view MANIFEST swaps in only here — after every gate and
       // sibling passed — so a failed create never leaves a resolvable
       // view, and the swap itself is a tiny atomic rename
@@ -519,20 +468,6 @@ object MaterializedJoin {
   /** Saturating add for plan-time byte bounds. */
   private def addSat(a: Long, b: Long): Long =
     if (a > Long.MaxValue - b) Long.MaxValue else a + b
-
-  /** Opt-in phase timing (`spark.graft.debug.phases`) — stderr wall time
-    * per maintenance phase, for attributing refresh cost during tuning. */
-  private def phase[A](spark: org.apache.spark.sql.SparkSession,
-      label: String)(body: => A): A =
-    if (!spark.conf.getOption("spark.graft.debug.phases")
-        .exists(_.toBoolean)) body
-    else {
-      val s0 = System.nanoTime()
-      val a = body
-      System.err.println(
-        f"[phase] $label%-32s ${(System.nanoTime() - s0) / 1e9}%7.2f s")
-      a
-    }
 
   /** One job: every listed dim's touched bucket ids over `src`'s key
     * values — `collect_set(bucketExpr)` per dim, output bounded by
@@ -608,21 +543,9 @@ object MaterializedJoin {
       // them behind. The replay is O(net changed rows) and a
       // content-preserving span nets to a watermark-only advance. Failure
       // is non-fatal: serving just declines an off-watermark index.
-      //
-      // PRICED per VERDICT r11 next #4: deployments that never enable
-      // `tailUnion` pay this sync for an invariant they never read —
-      // `spark.graft.view.refresh.syncIndexes=false` opts out (lazy mode:
-      // dim-churn tail serving declines until the maintenance cadence —
-      // which blanket-refreshes every index anyway — next syncs; every
-      // committed result is identical either way).
-      val eagerSync = l.spark.conf
-        .getOption("spark.graft.view.refresh.syncIndexes")
-        .forall(_.toBoolean)
-      if (eagerSync) meta.dims.foreach(_.idx.foreach { idx =>
-        try {
-          phase(l.spark, s"refresh:lockstep-sync($idx)") {
-            SecondaryIndex.refresh(l, idx, allowRebuild = true) }; ()
-        } catch { case _: Exception => () }
+      meta.dims.foreach(_.idx.foreach { idx =>
+        try { SecondaryIndex.refresh(l, idx, allowRebuild = true); () }
+        catch { case _: Exception => () }
       })
       movePin(l, s"join-pin-$name", toL)
       rs.zipWithIndex.foreach { case (r, i) =>
@@ -711,14 +634,12 @@ object MaterializedJoin {
     var srcBytes = 0L
     try {
       val rowsL: Option[DataFrame] = kL.map { k =>
-        phase(l.spark, "refresh:fact-keys+buckets") {
-          val buckets = k
-            .select(TableStore.bucketExpr(pk, lm.numBuckets).as("b"))
-            .distinct().collect().map(_.getLong(0)).toSeq
-          srcBytes = addSat(srcBytes, l.bucketBytes(buckets, toL))
-          MaterializedAgg.nsJoin(l.readBuckets(buckets, toL), k, pk,
-            "left_semi")
-        }
+        val buckets = k
+          .select(TableStore.bucketExpr(pk, lm.numBuckets).as("b"))
+          .distinct().collect().map(_.getLong(0)).toSeq
+        srcBytes = addSat(srcBytes, l.bucketBytes(buckets, toL))
+        MaterializedAgg.nsJoin(l.readBuckets(buckets, toL), k, pk,
+          "left_semi")
       }
       // per-dim affected fact rows; None = an index raced past toL (a
       // concurrent fact writer advanced it during the lockstep refresh —
@@ -736,8 +657,7 @@ object MaterializedJoin {
                 // whole-bucket rewrite scatters into EVERY index bucket)
                 // rebuilds in one projection instead of replaying a
                 // full-index read+rewrite through the changelog excepts
-                phase(l.spark, s"refresh:index-sync($idx)") {
-                  SecondaryIndex.refresh(l, idx, allowRebuild = true); () }
+                SecondaryIndex.refresh(l, idx, allowRebuild = true)
                 if (SecondaryIndex.baseWatermark(l, idx) != toL) {
                   idxRaced = true; None
                 } else {
@@ -786,7 +706,7 @@ object MaterializedJoin {
           .getOrElse(lAff.limit(0).select(pk.map(col): _*)))
         .distinct().persist()
       try {
-        if (phase(l.spark, "refresh:affected-count")(affected.count()) == 0) {
+        if (affected.count() == 0) {
           st.commitIncremental(st.readSnapshot(vv).limit(0), Nil,
             expectedParent = Some(vv), props = newProps)
           return finish()
@@ -798,13 +718,7 @@ object MaterializedJoin {
         // O(dim), and inner-view re-joins shuffle nothing
         val wanted = meta.dims.zipWithIndex.map { case (d, j) =>
           (j, d.lKeys, rs(j).manifest(toRs(j)).numBuckets) }
-        val bset: Map[Int, Set[Long]] =
-          if (l.spark.conf
-              .getOption("spark.graft.view.refresh.pruneDims")
-              .forall(_.toBoolean))
-            phase(l.spark, "refresh:dim-bucket-collect")(
-              bucketSets(lAff, wanted))
-          else Map.empty
+        val bset = bucketSets(lAff, wanted)
         val lAffB =
           if (rejoinBroadcastable(l.spark, joinType, srcBytes))
             broadcast(lAff)
@@ -834,10 +748,8 @@ object MaterializedJoin {
         val winners = newRows.select(vSchema.fieldNames.map(col): _*)
           .withColumn(OpCol, lit("PUT"))
           .unionByName(removedPadded)
-        phase(l.spark, "refresh:rejoin+upsert") {
-          st.upsertEq(winners, opCol = OpCol, removeOp = "REMOVE",
-            expectedParent = Some(vv), props = newProps)
-        }
+        st.upsertEq(winners, opCol = OpCol, removeOp = "REMOVE",
+          expectedParent = Some(vv), props = newProps)
         finish()
       } finally { affected.unpersist(); lAff.unpersist(); () }
     } finally {
@@ -925,14 +837,10 @@ object MaterializedJoin {
     if (fullKey.isEmpty || l.memoKey.contains('#')) return compute(bag.pin)
     bag.get(fullKey) match {
       case null =>
-        if (sys.env.contains("GRAFT_MEMO_DEBUG"))
-          System.err.println(s"[tailMemo] MISS $fullKey")
         val r = compute(bag.pin)
         bag.put(fullKey, r)
         r
       case r =>
-        if (sys.env.contains("GRAFT_MEMO_DEBUG"))
-          System.err.println(s"[tailMemo] HIT  $fullKey")
         if (liveOnHit()) r
         else {
           // a pinned DIM snapshot expired since the memo landed (ADVICE

@@ -201,27 +201,17 @@ object SecondaryIndex {
     * are derived from the OLD index-key values (retractions) and the NEW
     * ones (assertions); only those buckets rewrite. Returns the base
     * version the index now reflects. Idempotent: a refresh with no base
-    * movement is a no-op. */
-  /** `sharedFrames`: a co-maintained consumer (a MIN/MAX aggregate view
+    * movement is a no-op.
+    *
+    * `sharedFrames`: a co-maintained consumer (a MIN/MAX aggregate view
     * refreshing its covering index in lockstep) can hand over the
     * changelog frames it is about to replay itself — `(fromV, toV, pre,
     * post)`, typically persisted by the caller — so the two derivatives
     * pay the changed-file reads ONCE. Used only when the index's own
     * watermark matches `fromV` exactly; otherwise the index replays its
-    * own span. */
-  private def phase[A](spark: org.apache.spark.sql.SparkSession,
-      label: String)(body: => A): A =
-    if (!spark.conf.getOption("spark.graft.debug.phases")
-        .exists(_.toBoolean)) body
-    else {
-      val s0 = System.nanoTime()
-      val a = body
-      System.err.println(
-        f"[phase] $label%-32s ${(System.nanoTime() - s0) / 1e9}%7.2f s")
-      a
-    }
-
-  /** `project` generalizes how index rows derive from base rows: the
+    * own span.
+    *
+    * `project` generalizes how index rows derive from base rows: the
     * default projects the index columns verbatim (a classic GSI); a
     * DERIVED-key index (the ANN cell index, [[AnnIndex]]) supplies the
     * transform that computes its key — the netting, bucket routing, and
@@ -332,10 +322,9 @@ object SecondaryIndex {
     val post = net.filter(col("_g_net") > 0L).drop("_g_net")
     try {
       val bucketCol = TableStore.bucketExpr(indexKeys, im.numBuckets)
-      val touched = phase(base.spark, "idx:excepts+touched") {
-        pre.select(bucketCol.as("b"))
+      val touched = pre.select(bucketCol.as("b"))
         .union(post.select(bucketCol.as("b")))
-        .distinct().collect().map(_.getLong(0)).toSeq.sorted } // ≤ numBuckets rows
+        .distinct().collect().map(_.getLong(0)).toSeq.sorted // ≤ numBuckets rows
       if (touched.isEmpty) {
         // base moved but no keyed rows changed (metadata-only, compaction,
         // purge): just advance the watermark
@@ -360,11 +349,10 @@ object SecondaryIndex {
         .getOption("spark.graft.agg.refresh.rescanFraction")
         .map(_.toDouble).getOrElse(0.5)
       if (touched.size >= im.numBuckets.toDouble * rescanFrac2) {
-        phase(base.spark, "idx:rebuild") {
-          idx.commitBucketed(
-            proj(base.readSnapshot(toV)),
-            indexKeys, im.numBuckets, expectedParent = Some(iv),
-            props = TableStore.refreshProps(im.props) + (BaseVersionProp -> toV.toString)) }
+        idx.commitBucketed(
+          proj(base.readSnapshot(toV)),
+          indexKeys, im.numBuckets, expectedParent = Some(iv),
+          props = TableStore.refreshProps(im.props) + (BaseVersionProp -> toV.toString))
         movePin(base, name, toV)
         return toV
       }
@@ -378,9 +366,8 @@ object SecondaryIndex {
       val kept = idx.readBuckets(touched, iv)
         .join(changedKeys, baseKeys, "left_anti")
       val updated = kept.unionByName(post)
-      phase(base.spark, "idx:commit-incremental") {
-        idx.commitIncremental(updated, touched, expectedParent = Some(iv),
-          props = TableStore.refreshProps(im.props) + (BaseVersionProp -> toV.toString)) }
+      idx.commitIncremental(updated, touched, expectedParent = Some(iv),
+        props = TableStore.refreshProps(im.props) + (BaseVersionProp -> toV.toString))
     } finally { net.unpersist(); () }
     movePin(base, name, toV)
     toV

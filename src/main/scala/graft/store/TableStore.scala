@@ -2019,7 +2019,7 @@ class TableStore(val spark: SparkSession, val root: String,
       // the persisted winners, into disjoint dirs (snap/dv vs the snap's
       // bucket dirs) — overlap them (guide §2.6)
       @volatile var refs: Seq[DvRef] = Nil
-      MaterializedJoin.runConcurrent(spark, Seq(
+      graft.util.Concurrent.run(spark)(
         () => {
           refs = writeDvRows(hits, math.max(1, candidates.size), snapDir0)
         },
@@ -2028,7 +2028,7 @@ class TableStore(val spark: SparkSession, val root: String,
             .select(pm.schema.fieldNames.map(col): _*)
           writeMorAppend(applyFieldIds(post, pm.schema), keys,
             pm.numBuckets, snapDir0)
-        }))
+        })
       (refs, next0, snapDir0)
     } finally { winners.unpersist(); () }
     val fresh = listDataFiles(snapDir).filterNot(dvPath(snapDir))
@@ -2191,7 +2191,7 @@ class TableStore(val spark: SparkSession, val root: String,
       // stage tail leaves most cores idle; measured ~0.3 s per eq commit
       // at sf0.1, and every lifecycle fixture commits 2-3 of these)
       @volatile var eq: Seq[EqRef] = Nil
-      MaterializedJoin.runConcurrent(spark, Seq(
+      graft.util.Concurrent.run(spark)(
         () => {
           eq = writeEqRows(winners.select(keys.map(col): _*).distinct(),
             snapDir, next, refCols = Nil)
@@ -2201,7 +2201,7 @@ class TableStore(val spark: SparkSession, val root: String,
             .select(pm.schema.fieldNames.map(col): _*)
           writeMorAppend(applyFieldIds(post, pm.schema), keys,
             pm.numBuckets, snapDir)
-        }))
+        })
       eq
     } finally { winners.unpersist(); () }
     val fresh = listDataFiles(snapDir)
