@@ -58,18 +58,11 @@ import graft.store.{MaterializedAgg, TableStore}
   * untouched. Any analysis surprise inside the rewrite aborts it — the
   * rule can decline, never break. Kill switch:
   * `spark.graft.agg.rewrite=false`. */
-class AggViewRewriteRule extends Rule[LogicalPlan] {
+class AggViewRewriteRule
+    extends ServeRule("spark.graft.agg.rewrite", "agg-view rewrite") {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString("spark.graft.agg.rewrite", "true").toBoolean)
-      return plan
-    plan.transformUp {
-      case agg: Aggregate =>
-        try rewrite(agg).getOrElse(agg)
-        catch { case e: Exception =>
-          logWarning(s"agg-view rewrite declined on error: $e"); agg
-        }
-    }
+  protected def serve: PartialFunction[LogicalPlan, LogicalPlan] = {
+    case agg: Aggregate => rewrite(agg).getOrElse(agg)
   }
 
   /** Peel Projects / deterministic subquery-free Filters between the
@@ -203,19 +196,10 @@ class AggViewRewriteRule extends Rule[LogicalPlan] {
     val stale = all.filter(vm => vm.baseVersion < m.version &&
       store.existingVersions().contains(vm.baseVersion))
     if (stale.isEmpty) return None
-    val rescanFrac = conf.getConfString(
-      "spark.graft.agg.refresh.rescanFraction", "0.5").toDouble
-    def spanCheap(vm: MaterializedAgg.ViewMeta): Boolean = {
-      // memoized span probes (immutable per span — VERDICT r10 next #7);
-      // a content-preserving span nets to zero in the tail replay, so it
-      // prices as free regardless of its file diff
-      if (TableStore.contentPreservingSpan(store, vm.baseVersion,
-          m.version)) return true
-      val (a, r) = TableStore.changelogFileDiffSizes(store, vm.baseVersion,
-        m.version)
-      math.max(a, r).toDouble /
-        math.max(1L, m.nFiles).toDouble < rescanFrac
-    }
+    val rescanFrac = TableStore.rescanFraction(SparkSession.active)
+    // memoized span probes (immutable per span — VERDICT r10 next #7)
+    def spanCheap(vm: MaterializedAgg.ViewMeta): Boolean =
+      TableStore.spanChurn(store, vm.baseVersion, m.version) < rescanFrac
     // a tracked column renamed/dropped in the stale span would make the
     // tail's changelog frames (aligned to the NEW schema) unprojectable —
     // decline those views instead of throwing inside the optimizer

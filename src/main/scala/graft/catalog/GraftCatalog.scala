@@ -1248,15 +1248,13 @@ private[catalog] final class StatsPruningScanBuilder(name: String,
     // bucket-key equality conjunct is present (hash-bucketed files carry
     // near-full-range bounds — never all-match — so the sweep would always
     // fall through; the ordinary bucket-pruned path serves those), and
-    // above `spark.graft.exact.maxFiles` total files (the kept metadata —
+    // above [[TableStore.ExactMaxFiles]] total files (the kept metadata —
     // paths + parsed stats — collects to the driver; past the cap the
     // bounded-residue guarantee needs the ordinary conservative path,
     // which carries paths only).
-    val exactCap = store.spark.conf
-      .getOption("spark.graft.exact.maxFiles").map(_.toLong)
-      .getOrElse(200000L)
     if (exprs.nonEmpty && !m.hasDeletes && m.isSharded &&
-        m.nFiles <= exactCap && pairs.forall(_._2.isDefined) &&
+        m.nFiles <= TableStore.ExactMaxFiles &&
+        pairs.forall(_._2.isDefined) &&
         TableStore.keyEqualityBuckets(exprs, m).isEmpty) {
       store.exactMatchMeta(m, exprs) match {
         case Right(metas) =>
@@ -1412,9 +1410,6 @@ private[catalog] final class StatsPruningScanBuilder(name: String,
       dt != org.apache.spark.sql.types.StringType) return false
     val desc = so.direction() == SortDirection.DESCENDING
     val nullsTop = so.nullOrdering() == NullOrdering.NULLS_FIRST
-    val exactCap = store.spark.conf
-      .getOption("spark.graft.exact.maxFiles").map(_.toLong)
-      .getOrElse(200000L)
     val entries: Seq[(String, Long, Option[graft.store.FileStats.ColStat])] =
       if (!m.isSharded) {
         val candidates = exactFiles.getOrElse(m.inlineFiles)
@@ -1427,7 +1422,7 @@ private[catalog] final class StatsPruningScanBuilder(name: String,
         case Some(metas) => // exact-filtered: verdicts already driver-held
           metas.map { case (p, r, cols) => (p, r, cols.get(colName)) }
         case None =>
-          if (m.nFiles > exactCap) return false
+          if (m.nFiles > TableStore.ExactMaxFiles) return false
           val (all, unknown) = store.hybridMatchMeta(m, Nil)
           all.map { case (p, r, cols) => (p, r, cols.get(colName)) } ++
             unknown.map(p => (p, 0L,

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression, ExprId, Literal, PlanExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions.{count => fcount, lit, max => fmax, min => fmin, sum => fsum}
 import org.apache.spark.sql.graftbridge.{ColumnBridge, DatasetBridge}
 import org.apache.spark.sql.types.{LongType, StringType}
@@ -72,10 +71,12 @@ import graft.store.FileStats
   * ([[graft.store.TableStore.hybridMatchMeta]] — the same sweep the scan
   * builder runs for exact pushdown, whose per-file verdicts a straddler
   * used to discard); the stats side materializes O(proven files) tiny
-  * rows on the driver, bounded by `spark.graft.exact.maxFiles`. All-match
-  * empty (nothing provable) declines — the ordinary scan is already the
-  * right plan. Kill switch: `spark.graft.agg.metadata.hybrid=false`. */
-class HybridMetaAggRule extends Rule[LogicalPlan] {
+  * rows on the driver, bounded by [[graft.store.TableStore.ExactMaxFiles]].
+  * All-match empty (nothing provable) declines — the ordinary scan is
+  * already the right plan. Kill switch:
+  * `spark.graft.agg.metadata.hybrid=false`. */
+class HybridMetaAggRule extends ServeRule(
+    "spark.graft.agg.metadata.hybrid", "hybrid metadata aggregate") {
 
   /** One validated grouping expression: `raw` as the Aggregate wrote it
     * (what the select list references — a hoisted `_groupingexpression`
@@ -102,17 +103,8 @@ class HybridMetaAggRule extends Rule[LogicalPlan] {
       : Option[graft.store.ExprBounds.Chain] =
     graft.store.ExprBounds.classify(e)
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString("spark.graft.agg.metadata.hybrid", "true")
-        .toBoolean) return plan
-    plan.transformUp {
-      case agg: Aggregate =>
-        try rewrite(agg).getOrElse(agg)
-        catch { case e: Exception =>
-          logWarning(s"hybrid metadata aggregate declined on error: $e")
-          agg
-        }
-    }
+  protected def serve: PartialFunction[LogicalPlan, LogicalPlan] = {
+    case agg: Aggregate => rewrite(agg).getOrElse(agg)
   }
 
   private def rewrite(agg: Aggregate): Option[LogicalPlan] = {
@@ -275,9 +267,6 @@ class HybridMetaAggRule extends Rule[LogicalPlan] {
     if (!conds.forall(provable)) return None
 
     // ---- three-way file classification ---------------------------------
-    val exactCap = store.spark.conf
-      .getOption("spark.graft.exact.maxFiles").map(_.toLong)
-      .getOrElse(200000L)
     val (allMatch0, straddle0):
         (Seq[(String, Long, Map[String, FileStats.ColStat])], Seq[String]) =
       if (!m.isSharded) {
@@ -293,7 +282,7 @@ class HybridMetaAggRule extends Rule[LogicalPlan] {
         }
         (am.result(), st.result())
       } else {
-        if (m.nFiles > exactCap) return None
+        if (m.nFiles > graft.store.TableStore.ExactMaxFiles) return None
         store.hybridMatchMeta(m, conds)
       }
     if (allMatch0.isEmpty) return None // nothing provable: scan is right

@@ -1,10 +1,9 @@
 package graft.catalog
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, EqualTo, Expression, ExprId, NamedExpression, PlanExpression}
 import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftOuter, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.graftbridge.{ColumnBridge, DatasetBridge, ParquetTableBridge}
@@ -64,31 +63,24 @@ import graft.store.{MaterializedJoin, TableStore}
   * the same pure DSv2 scan as exact serving, so a stacked aggregate still
   * composes above it and the dashboard star query stays O(groups) BETWEEN
   * cadence passes. */
-class JoinViewRewriteRule extends Rule[LogicalPlan] {
+class JoinViewRewriteRule
+    extends ServeRule("spark.graft.agg.rewrite", "join-view rewrite") {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString("spark.graft.agg.rewrite", "true").toBoolean)
-      return plan
-    // TOP-DOWN: an n-ary chain must match its n-dim view before the
-    // inner binary joins are offered to narrower views
-    plan.transformDown {
-      // a Project above the join narrows what must map: the join node's
-      // own output always carries BOTH sides' columns (the dim key
-      // survives for the condition even when unselected), which under
-      // LEFT OUTER can be unmappable while the selected columns map fine
-      case p @ Project(list, j: Join) =>
-        logDebug(s"considering ${j.joinType} join (projected)")
-        try rewrite(j, list, p.output).getOrElse(p)
-        catch { case e: Exception =>
-          logWarning(s"join-view rewrite declined on error: $e"); p
-        }
-      case j: Join =>
-        logDebug(s"considering ${j.joinType} join")
-        try rewrite(j, j.output, j.output).getOrElse(j)
-        catch { case e: Exception =>
-          logWarning(s"join-view rewrite declined on error: $e"); j
-        }
-    }
+  // TOP-DOWN: an n-ary chain must match its n-dim view before the
+  // inner binary joins are offered to narrower views
+  override protected def topDown: Boolean = true
+
+  protected def serve: PartialFunction[LogicalPlan, LogicalPlan] = {
+    // a Project above the join narrows what must map: the join node's
+    // own output always carries BOTH sides' columns (the dim key
+    // survives for the condition even when unselected), which under
+    // LEFT OUTER can be unmappable while the selected columns map fine
+    case p @ Project(list, j: Join) =>
+      logDebug(s"considering ${j.joinType} join (projected)")
+      rewrite(j, list, p.output).getOrElse(p)
+    case j: Join =>
+      logDebug(s"considering ${j.joinType} join")
+      rewrite(j, j.output, j.output).getOrElse(j)
   }
 
   /** One peeled scan side of the join chain. */
@@ -344,22 +336,14 @@ class JoinViewRewriteRule extends Rule[LogicalPlan] {
     val budgetMs = conf.getConfString(
       "spark.graft.agg.rewrite.maxStalenessMs", "0").toLong
     if (!tailOn && budgetMs <= 0) return None
-    val rescanFrac = conf.getConfString(
-      "spark.graft.agg.refresh.rescanFraction", "0.5").toDouble
+    val rescanFrac = TableStore.rescanFraction(SparkSession.active)
+    // an all-content-preserving span (compaction) diffs to ~all files but
+    // nets to zero — storedPlusTail serves it as the stored rows outright,
+    // and spanChurn prices it as free (the refresh router's rule). Both
+    // probes are memoized per span (immutable) so repeated stale planning
+    // does no O(span) manifest walking (VERDICT r10 next #7).
     def spanCheap(st: TableStore, fromV: Long, toM: TableStore.Manifest)
-        : Boolean = {
-      // an all-content-preserving span (compaction) diffs to ~all files
-      // but nets to zero — storedPlusTail serves it as the stored rows
-      // outright, so price it as free (the refresh router's rule). Both
-      // probes are memoized per span (immutable) so repeated stale
-      // planning does no O(span) manifest walking (VERDICT r10 next #7).
-      if (fromV == toM.version) return true
-      if (TableStore.contentPreservingSpan(st, fromV, toM.version))
-        return true
-      val (a, r) = TableStore.changelogFileDiffSizes(st, fromV, toM.version)
-      math.max(a, r).toDouble /
-        math.max(1L, toM.nFiles).toDouble < rescanFrac
-    }
+        : Boolean = TableStore.spanChurn(st, fromV, toM.version) < rescanFrac
     // tail candidacy: fact at-or-behind the scanned snapshot, every dim
     // at-or-behind ITS scanned snapshot (exact serving above already took
     // the all-equal case) — dim churn serves through the lockstep

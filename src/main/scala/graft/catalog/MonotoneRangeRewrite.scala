@@ -2,7 +2,6 @@ package graft.catalog
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.types._
 
@@ -42,66 +41,57 @@ import org.apache.spark.sql.types._
   * AND only), where the original NULL result and the range's NULL/FALSE
   * both reject the row. Kill switch:
   * `spark.graft.filter.monotoneRewrite=false`. */
-class MonotoneRangeRewriteRule extends Rule[LogicalPlan] {
+class MonotoneRangeRewriteRule extends ServeRule(
+    "spark.graft.filter.monotoneRewrite", "monotone range rewrite") {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString("spark.graft.filter.monotoneRewrite", "true")
-        .toBoolean) return plan
-    plan.transformUp {
-      case f @ Filter(cond, child) =>
-        try {
-          val conjuncts = splitAnd(cond)
-          val rewritten = conjuncts.map(c => rewriteConjunct(c) match {
-            case Some(r) => (r, true)
-            case None => (c, false)
-          })
-          // PERIODIC chain conjuncts (r16): `month(ts) = 5` has no
-          // invertible range form, but the file-bound proofs in
-          // [[graft.store.ExprBounds]] can still prune its file list —
-          // hand the raw conjunct to the replan hook (sound: it is
-          // implied by this very Filter, which stays row-exact above)
-          val periodic = rewritten.collect {
-            case (c, false) if graft.store.ExprBounds.prunable(c) => c
+  protected def serve: PartialFunction[LogicalPlan, LogicalPlan] = {
+    case f @ Filter(cond, child) =>
+      val conjuncts = splitAnd(cond)
+      val rewritten = conjuncts.map(c => rewriteConjunct(c) match {
+        case Some(r) => (r, true)
+        case None => (c, false)
+      })
+      // PERIODIC chain conjuncts (r16): `month(ts) = 5` has no
+      // invertible range form, but the file-bound proofs in
+      // [[graft.store.ExprBounds]] can still prune its file list —
+      // hand the raw conjunct to the replan hook (sound: it is
+      // implied by this very Filter, which stays row-exact above)
+      val periodic = rewritten.collect {
+        case (c, false) if graft.store.ExprBounds.prunable(c) => c
+      }
+      if (!rewritten.exists(_._2)) {
+        if (periodic.nonEmpty) child match {
+          case rel: DataSourceV2ScanRelation => rel.scan match {
+            case rp: RuntimePrunableScan => rp.pruneWith(periodic)
+            case _ => ()
           }
-          if (!rewritten.exists(_._2)) {
-            if (periodic.nonEmpty) child match {
-              case rel: DataSourceV2ScanRelation => rel.scan match {
-                case rp: RuntimePrunableScan => rp.pruneWith(periodic)
-                case _ => ()
-              }
-              case _ => ()
-            }
-            f
-          }
-          // a provably-empty conjunct (unaligned equality literal): the
-          // main optimizer's PruneFilters ran before this batch, so fold
-          // the Filter to the empty relation here
-          else if (rewritten.exists(_._1 == Literal.FalseLiteral))
-            org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
-              f.output, data = Seq.empty)
-          else {
-            val derived = (rewritten.collect { case (r, true) => r }
-              .flatMap(splitAnd).filterNot(_.isInstanceOf[Literal])) ++
-              periodic
-            // pushdown already ran: hand the derived bare-column ranges
-            // (and raw periodic conjuncts) to the scan's replan hook so
-            // the FILE LIST shrinks too
-            child match {
-              case rel: DataSourceV2ScanRelation => rel.scan match {
-                case rp: RuntimePrunableScan if derived.nonEmpty =>
-                  rp.pruneWith(derived)
-                case _ => ()
-              }
-              case _ => ()
-            }
-            Filter(rewritten.map(_._1).reduce(And), child)
-          }
-        } catch {
-          case e: Exception =>
-            logWarning(s"monotone range rewrite declined on error: $e")
-            f
+          case _ => ()
         }
-    }
+        f
+      }
+      // a provably-empty conjunct (unaligned equality literal): the
+      // main optimizer's PruneFilters ran before this batch, so fold
+      // the Filter to the empty relation here
+      else if (rewritten.exists(_._1 == Literal.FalseLiteral))
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+          f.output, data = Seq.empty)
+      else {
+        val derived = (rewritten.collect { case (r, true) => r }
+          .flatMap(splitAnd).filterNot(_.isInstanceOf[Literal])) ++
+          periodic
+        // pushdown already ran: hand the derived bare-column ranges
+        // (and raw periodic conjuncts) to the scan's replan hook so
+        // the FILE LIST shrinks too
+        child match {
+          case rel: DataSourceV2ScanRelation => rel.scan match {
+            case rp: RuntimePrunableScan if derived.nonEmpty =>
+              rp.pruneWith(derived)
+            case _ => ()
+          }
+          case _ => ()
+        }
+        Filter(rewritten.map(_._1).reduce(And), child)
+      }
   }
 
   private def splitAnd(e: Expression): Seq[Expression] = e match {

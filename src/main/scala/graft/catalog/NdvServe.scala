@@ -4,7 +4,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression, PlanExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, HyperLogLogPlusPlus}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.LongType
 
 /** `approx_count_distinct` served from the analyze NDV sidecar (r16,
@@ -44,19 +43,11 @@ import org.apache.spark.sql.types.LongType
   * Spark's own HLL++ estimate (different sketch family) but carries the
   * same accuracy contract the query's rsd declared. Kill switch:
   * `spark.graft.agg.metadata.ndv=false`. */
-class NdvServeRule extends Rule[LogicalPlan] {
+class NdvServeRule
+    extends ServeRule("spark.graft.agg.metadata.ndv", "NDV metadata serve") {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString("spark.graft.agg.metadata.ndv", "true")
-        .toBoolean) return plan
-    plan.transformUp {
-      case agg: Aggregate =>
-        try rewrite(agg).getOrElse(agg)
-        catch { case e: Exception =>
-          logWarning(s"NDV metadata serve declined on error: $e")
-          agg
-        }
-    }
+  protected def serve: PartialFunction[LogicalPlan, LogicalPlan] = {
+    case agg: Aggregate => rewrite(agg).getOrElse(agg)
   }
 
   private def rewrite(agg: Aggregate): Option[LogicalPlan] = {
@@ -431,8 +422,6 @@ class NdvServeRule extends Rule[LogicalPlan] {
       }
       (marked, ok, false, gk, nn.toSeq)
     }
-    val exactCap = sp.conf.getOption("spark.graft.exact.maxFiles")
-      .map(_.toLong).getOrElse(200000L)
     import sp.implicits._
     val proof: org.apache.spark.sql.DataFrame =
       if (!m.isSharded) {
@@ -448,7 +437,7 @@ class NdvServeRule extends Rule[LogicalPlan] {
         }
         rows.toDF("path", "marked", "ok", "exc", "gk", "rows", "nn")
       } else {
-        if (m.nFiles > exactCap) return None
+        if (m.nFiles > graft.store.TableStore.ExactMaxFiles) return None
         graft.store.ManifestShards.read(sp, m.shards.map(_.path))
           .flatMap { fm =>
             if (fm.rows == 0L) None

@@ -2,7 +2,6 @@ package graft.catalog
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.types.{DataType, StringType}
 
@@ -126,23 +125,17 @@ private[catalog] object TopKFileWalk {
   * path serves those), or a walk that prunes nothing. Sharded tiers run
   * the decidability sweep as the ONE distributed `exactMatchMeta` job.
   * Kill switch: `spark.graft.topk.metadata=false`. */
-class TopKMetaPruneRule extends Rule[LogicalPlan] {
+class TopKMetaPruneRule
+    extends ServeRule("spark.graft.topk.metadata", "topk metadata prune") {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString("spark.graft.topk.metadata", "true").toBoolean)
-      return plan
-    plan.transformUp {
-      case l @ Limit(le @ IntegerLiteral(n),
-          sort @ Sort(orders, true, child, _)) if n > 0 && orders.nonEmpty =>
-        try rewrite(n, orders, child) match {
-          case Some(newChild) =>
-            GlobalLimit(le, LocalLimit(le, sort.copy(child = newChild)))
-          case None => l
-        } catch { case e: Exception =>
-          logWarning(s"topk metadata prune declined on error: $e")
-          l
-        }
-    }
+  protected def serve: PartialFunction[LogicalPlan, LogicalPlan] = {
+    case l @ Limit(le @ IntegerLiteral(n),
+        sort @ Sort(orders, true, child, _)) if n > 0 && orders.nonEmpty =>
+      rewrite(n, orders, child) match {
+        case Some(newChild) =>
+          GlobalLimit(le, LocalLimit(le, sort.copy(child = newChild)))
+        case None => l
+      }
   }
 
   /** The Filter-dropped child when the composition applies. */
@@ -198,9 +191,6 @@ class TopKMetaPruneRule extends Rule[LogicalPlan] {
       if (!ok || t.exists(_.isInstanceOf[PlanExpression[_]])) return None
       t
     }
-    val exactCap = store.spark.conf
-      .getOption("spark.graft.exact.maxFiles").map(_.toLong)
-      .getOrElse(200000L)
     // per-file verdicts → the might-match candidates with the sort
     // column's stats: all-match files carry their row counts into the
     // walk's top-n guarantee; STRADDLERS (might but not must) contribute
@@ -220,7 +210,7 @@ class TopKMetaPruneRule extends Rule[LogicalPlan] {
         }
         out.result()
       } else {
-        if (m.nFiles > exactCap) return None
+        if (m.nFiles > graft.store.TableStore.ExactMaxFiles) return None
         if (graft.store.TableStore.keyEqualityBuckets(conjuncts, m)
             .nonEmpty) return None
         store.exactMatchMeta(m, conjuncts) match {
@@ -230,7 +220,7 @@ class TopKMetaPruneRule extends Rule[LogicalPlan] {
           case _ =>
             // straddlers present: the exact sweep declines, so pull every
             // file's stats through the memoized unfiltered sweep (the
-            // pushTopN fallback's bound: ≤ exactCap driver residue) and
+            // pushTopN fallback's bound: ≤ ExactMaxFiles driver residue) and
             // classify might/must per file here — straddlers enter the
             // walk with their real bounds but ZERO guarantee
             val (all, unknown) = store.hybridMatchMeta(m, Nil)

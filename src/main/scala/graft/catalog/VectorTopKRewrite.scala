@@ -4,7 +4,6 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, AttributeReference, Descending, Expression, ExprId, Literal, NullsFirst, NullsLast, PlanExpression, Round, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.IntegerType
@@ -57,29 +56,18 @@ import graft.store.{AnnIndex, TableStore}
   * through the same kernel), so the rewrite is EXACT unless the user
   * explicitly trades recall for speed by lowering nProbe. Kill switch:
   * `spark.graft.ann.rewrite=false`. */
-class VectorTopKRewriteRule extends Rule[LogicalPlan] {
+class VectorTopKRewriteRule
+    extends ServeRule("spark.graft.ann.rewrite", "vector top-k rewrite") {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString("spark.graft.ann.rewrite", "true").toBoolean)
-      return plan
-    plan.transformUp {
-      case gl @ GlobalLimit(Literal(k: Int, IntegerType),
-          LocalLimit(_, Sort(orders, true, child, _))) if k > 0 =>
-        try rewrite(k, orders, child).getOrElse(gl)
-        catch { case e: Exception =>
-          logWarning(s"vector top-k rewrite declined on error: $e")
-          gl
-        }
-      // the JOIN-SHAPED BATCH query (r17, VERDICT r16 next #5): per-query
-      // rank window over queries × corpus
-      case f @ Filter(cond,
-          w: org.apache.spark.sql.catalyst.plans.logical.Window) =>
-        try rewriteBatch(cond, w, f).getOrElse(f)
-        catch { case e: Exception =>
-          logWarning(s"batch vector top-k rewrite declined on error: $e")
-          f
-        }
-    }
+  protected def serve: PartialFunction[LogicalPlan, LogicalPlan] = {
+    case gl @ GlobalLimit(Literal(k: Int, IntegerType),
+        LocalLimit(_, Sort(orders, true, child, _))) if k > 0 =>
+      rewrite(k, orders, child).getOrElse(gl)
+    // the JOIN-SHAPED BATCH query (r17, VERDICT r16 next #5): per-query
+    // rank window over queries × corpus
+    case f @ Filter(cond,
+        w: org.apache.spark.sql.catalyst.plans.logical.Window) =>
+      rewriteBatch(cond, w, f).getOrElse(f)
   }
 
   /** SQL-TRANSPARENT BATCH vector top-k (r17, VERDICT r16 next #5): the

@@ -773,7 +773,7 @@ object SqlSurface {
   /** [[sqlAggMetadataGroup]] on the SHARDED metadata tier — the per-file
     * verdicts and group keys come from the one distributed
     * `hybridMatchMeta` sweep, O(proven files) driver residue under the
-    * exact-maxFiles cap. */
+    * [[graft.store.TableStore.ExactMaxFiles]] cap. */
   private val sqlAggMetadataGroupSharded: Q = (s, d) => {
     val cat = catalogFor(s, d)
     val wh = warehouseFor(d)

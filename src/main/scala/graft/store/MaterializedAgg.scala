@@ -153,20 +153,10 @@ object MaterializedAgg {
   }
 
   /** Every agg view's metas under `base` — snapshot-cached process-wide
-    * exactly as [[MaterializedJoin.viewMetas]] (VERDICT r11 next #1):
-    * invalidated by every in-process commit under `base.root` and by
-    * drops; `spark.graft.meta.registryCache=false` opts out for
-    * multi-driver deployments. */
-  private[graft] def viewMetas(base: TableStore): Seq[ViewMeta] = {
-    val cacheOn = base.spark.conf.getOption("spark.graft.meta.registryCache")
-      .forall(_.toBoolean)
-    if (!cacheOn) return list(base).flatMap(viewMeta(base, _))
-    val c = TableStore.registryGet("agg", base.memoKey)
-    if (c != null) return c.asInstanceOf[Seq[ViewMeta]]
-    val metas = list(base).flatMap(viewMeta(base, _))
-    TableStore.registryPut("agg", base.memoKey, metas)
-    metas
-  }
+    * exactly as [[MaterializedJoin.viewMetas]] (VERDICT r11 next #1). */
+  private[graft] def viewMetas(base: TableStore): Seq[ViewMeta] =
+    TableStore.registryCached("agg", base)(
+      list(base).flatMap(viewMeta(base, _)))
 
   /** Internal materialized row shape:
     * groupKeys ++ (sum_c, nn_c)* ++ (min_c, max_c)* ++ _cnt. */
@@ -387,21 +377,12 @@ object MaterializedAgg {
     // write. The file diff is driver-resident metadata, so the route is
     // priced before any data is read. Shared frames skip the check — the
     // parent already chose (and paid for) the replay.
-    val rescanFrac = base.spark.conf
-      .getOption("spark.graft.agg.refresh.rescanFraction")
-      .map(_.toDouble).getOrElse(0.5)
     val framesMatch = sharedFrames.exists(f => f._1 == fromV && f._2 == toV)
     // a span of ONLY content-preserving commits (compaction, z-order,
     // purge, rebucket) diffs to all-files-changed but nets to ZERO — the
     // replay is a watermark-only advance with no derivative rewrites,
     // strictly better than a recompute; keep it off the recompute route
-    val contentPreservingSpan = {
-      val have = base.existingVersions().toSet
-      (fromV + 1 to toV).forall(v => have(v) &&
-        base.manifest(v).props
-          .get(TableStore.ContentPreservingProp).contains("true"))
-    }
-    if (!framesMatch && contentPreservingSpan) {
+    if (!framesMatch && TableStore.contentPreservingSpan(base, fromV, toV)) {
       // pure metadata advance: no diff, no reads, no derivative rewrites.
       // The covering index is left as-is — the next data refresh replays
       // the index's own (netting-to-zero) span before any dirty rescan.
@@ -415,11 +396,8 @@ object MaterializedAgg {
     }
     val diff: Option[(Seq[String], Seq[String])] =
       if (framesMatch) None else Some(base.changelogFileDiff(fromV, toV))
-    val changedFrac = diff.fold(0.0) { case (a, r) =>
-      math.max(a.size, r.size).toDouble /
-        math.max(1L, base.manifest(toV).nFiles).toDouble
-    }
-    if (!framesMatch && changedFrac >= rescanFrac) {
+    if (!framesMatch && TableStore.spanChurn(base, fromV, toV) >=
+        TableStore.rescanFraction(base.spark)) {
       // FULL RECOMPUTE: one O(base) aggregation pass, replacing the whole
       // view snapshot. Companions route themselves on the same span (same
       // fraction → same choice). The covering index is NOT advanced — its

@@ -174,16 +174,8 @@ object MaterializedJoin {
     * ([[TableStore.invalidateMeta]]); `spark.graft.meta.registryCache=false`
     * opts out for multi-driver deployments where another process runs the
     * maintenance cadence. */
-  private[graft] def viewMetas(l: TableStore): Seq[ViewMeta] = {
-    val cacheOn = l.spark.conf.getOption("spark.graft.meta.registryCache")
-      .forall(_.toBoolean)
-    if (!cacheOn) return list(l).flatMap(viewMeta(l, _))
-    val c = TableStore.registryGet("join", l.memoKey)
-    if (c != null) return c.asInstanceOf[Seq[ViewMeta]]
-    val metas = list(l).flatMap(viewMeta(l, _))
-    TableStore.registryPut("join", l.memoKey, metas)
-    metas
-  }
+  private[graft] def viewMetas(l: TableStore): Seq[ViewMeta] =
+    TableStore.registryCached("join", l)(list(l).flatMap(viewMeta(l, _)))
 
   private def requireMain(st: TableStore, what: String): Unit =
     require(st.branch.isEmpty,
@@ -483,18 +475,14 @@ object MaterializedJoin {
         i -> row.getSeq[Long](c).toSet }.toMap
     }
 
-  /** The re-join's build-side broadcast cap
-    * (`spark.graft.view.rejoinBroadcastBytes`, default 64 MiB): when the
-    * affected-row union's metadata byte bound sits under it and the view
-    * is an INNER join, the union is broadcast — the dims then stream
+  /** The re-join's build-side broadcast cap ([[TableStore.BroadcastBytes]]):
+    * when the affected-row union's metadata byte bound sits under it and
+    * the view is an INNER join, the union is broadcast — the dims then stream
     * (bucket-pruned) with NO shuffle, the plan a 100 TB re-join wants.
     * LEFT joins keep the shuffle (Spark cannot broadcast the preserved
     * side of an outer join). */
-  private def rejoinBroadcastable(spark: org.apache.spark.sql.SparkSession,
-      joinType: String, srcBytes: Long): Boolean =
-    joinType == "inner" && srcBytes <= spark.conf
-      .getOption("spark.graft.view.rejoinBroadcastBytes")
-      .map(_.toLong).getOrElse(64L << 20)
+  private def rejoinBroadcastable(joinType: String, srcBytes: Long): Boolean =
+    joinType == "inner" && srcBytes <= TableStore.BroadcastBytes
 
   def refresh(l: TableStore, name: String): Long = {
     requireMain(l, "fact")
@@ -553,14 +541,9 @@ object MaterializedJoin {
       }
       toL
     }
-    def contentPreserving(st2: TableStore, a: Long, b: Long): Boolean = {
-      val have = st2.existingVersions().toSet
-      (a + 1 to b).forall(v => have(v) && st2.manifest(v).props
-        .get(TableStore.ContentPreservingProp).contains("true"))
-    }
-    val cpL = contentPreserving(l, fromL, toL)
+    val cpL = TableStore.contentPreservingSpan(l, fromL, toL)
     val cpRs = rs.zip(fromRs).zip(toRs).map { case ((r, a), b) =>
-      contentPreserving(r, a, b) }
+      TableStore.contentPreservingSpan(r, a, b) }
     if (cpL && cpRs.forall(identity)) {
       st.commitIncremental(st.readSnapshot(vv).limit(0), Nil,
         expectedParent = Some(vv), props = newProps)
@@ -577,20 +560,9 @@ object MaterializedJoin {
       finish()
     }
     // ---- route: delta-keyed upsert vs full recompute ------------------
-    val rescanFrac = l.spark.conf
-      .getOption("spark.graft.agg.refresh.rescanFraction")
-      .map(_.toDouble).getOrElse(0.5)
     // a side whose whole span is content-preserving diffs to ~all files
-    // changed but NETS to zero — price it as zero churn so a dim
-    // compaction + a tiny fact delta stays on the delta path (ADVICE r9;
-    // mirrors the agg-side contentPreservingSpan shortcut)
-    def frac(st2: TableStore, a: Long, b: Long, cp: Boolean): Double =
-      if (a == b || cp) 0.0
-      else {
-        val (ad, rm2) = st2.changelogFileDiff(a, b)
-        math.max(ad.size, rm2.size).toDouble /
-          math.max(1L, st2.manifest(b).nFiles).toDouble
-      }
+    // changed but NETS to zero — spanChurn prices it as zero churn so a
+    // dim compaction + a tiny fact delta stays on the delta path (ADVICE r9)
     // a fact schema evolution or rebucket in the span changes the view's
     // own shape — the row-level delta cannot express that; rebuild under
     // the CURRENT fact layout. A map-typed column arriving via evolution
@@ -602,10 +574,11 @@ object MaterializedJoin {
       vm0.bucketKeys != lm.bucketKeys
     val mapEvolved = lm.schema.fields
       .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.MapType])
-    val fracs = frac(l, fromL, toL, cpL) +:
-      rs.zip(fromRs).zip(toRs).zip(cpRs).map { case (((r, a), b), cp) =>
-        frac(r, a, b, cp) }
-    if (drift || mapEvolved || fracs.max >= rescanFrac) return recompute()
+    val churn = TableStore.spanChurn(l, fromL, toL) +:
+      rs.zip(fromRs).zip(toRs).map { case ((r, a), b) =>
+        TableStore.spanChurn(r, a, b) }
+    if (drift || mapEvolved ||
+        churn.max >= TableStore.rescanFraction(l.spark)) return recompute()
     // ---- affected fact rows, from the side that can prune -------------
     // fact-side: netted PKs → their OWN buckets (PK-clustered, the fact
     // read prunes well). dim-side: netted dim keys → that dim's COVERING
@@ -720,7 +693,7 @@ object MaterializedJoin {
           (j, d.lKeys, rs(j).manifest(toRs(j)).numBuckets) }
         val bset = bucketSets(lAff, wanted)
         val lAffB =
-          if (rejoinBroadcastable(l.spark, joinType, srcBytes))
+          if (rejoinBroadcastable(joinType, srcBytes))
             broadcast(lAff)
           else lAff
         val newRows = joined(lAffB,
@@ -784,9 +757,9 @@ object MaterializedJoin {
     *    `toL` serve the lookup directly (authoritative, no watermark).
     * The re-join reads every dim BUCKET-PRUNED to the affected rows' key
     * values (the refresh path's economy on the read path — a
-    * non-broadcastable dim costs O(touched buckets), not O(dim));
-    * `spark.graft.agg.rewrite.tail.pruneDims=false` disables the
-    * plan-time pruning job.
+    * non-broadcastable dim costs O(touched buckets), not O(dim)) once the
+    * dim holds at least `spark.graft.agg.rewrite.tail.pruneDimMinFiles`
+    * files (default 64); smaller dims skip the plan-time pruning job.
     *
     * None = not serveable: span expired/unpunned, fact schema or
     * bucket-layout drift, a re-keyed or column-dropped dim, a map-typed
@@ -943,13 +916,9 @@ object MaterializedJoin {
     try {
     val deltaK = tracked(keys)
     val postP = tracked(post)
-    val spark = l.spark
     // per-dim netted keys, renamed to the fact-side join columns;
     // broadcast-hinted at join sites when the span's changed bytes bound
     // them small (the storedPlusTail policy)
-    val bcastCap = spark.conf
-      .getOption("spark.graft.view.keyBroadcastBytes")
-      .map(_.toLong).getOrElse(64L << 20)
     val dks: Seq[Option[(DimMeta, DataFrame, Boolean)]] =
       vm.dims.zip(rs).zip(toRs).zipWithIndex.map {
         case (((d, r), toR), i) =>
@@ -961,7 +930,8 @@ object MaterializedJoin {
               case (df, (rk, lk)) => df.withColumnRenamed(rk, lk)
             }
             val small =
-              TableStore.spanChangedBytes(r, d.rVersion, toR) <= bcastCap
+              TableStore.spanChangedBytes(r, d.rVersion, toR) <=
+                TableStore.BroadcastBytes
             Some((d, dk, small))
           }
       }
@@ -1083,9 +1053,6 @@ object MaterializedJoin {
     val pk = vm0.bucketKeys
     val lAll = lm.schema.fieldNames.toSeq
     val spark = l.spark
-    val pruneDims0 = spark.conf
-      .getOption("spark.graft.agg.rewrite.tail.pruneDims")
-      .forall(_.toBoolean)
     // The netted-key frames are the RIGHT side of every semi/anti join
     // below, with the (huge) stored view on the left — un-hinted, a
     // disabled/conservative auto-broadcast shuffles the whole view per
@@ -1095,8 +1062,6 @@ object MaterializedJoin {
     // pricing can't give (tail serving at 100 TB must never shuffle the
     // stored view to subtract a handful of churned keys).
     val bcastKeys = {
-      val cap = spark.conf.getOption("spark.graft.view.keyBroadcastBytes")
-        .map(_.toLong).getOrElse(64L << 20)
       val b = (if (factMoved) TableStore.spanChangedBytes(l, fromL, toL)
         else 0L) +
         vm.dims.zip(rs).zip(toRs).zipWithIndex.map {
@@ -1104,7 +1069,7 @@ object MaterializedJoin {
             if (dimMoved(i)) TableStore.spanChangedBytes(r, d.rVersion, toR)
             else 0L
         }.sum
-      b <= cap
+      b <= TableStore.BroadcastBytes
     }
     def keyHint(df: DataFrame): DataFrame =
       if (bcastKeys) broadcast(df) else df
@@ -1141,7 +1106,7 @@ object MaterializedJoin {
       .getOption("spark.graft.agg.rewrite.tail.pruneDimMinFiles")
       .map(_.toLong).getOrElse(64L)
     val pruneDimAt: Seq[Boolean] =
-      rms.map(m => pruneDims0 && m.nFiles >= pruneMinFiles)
+      rms.map(m => m.nFiles >= pruneMinFiles)
     val pruneDims = pruneDimAt.exists(identity)
     // ---- affected fact rows, all evaluating at snapshot toL -----------
     // `srcBytes` accumulates a PLAN-TIME upper bound on the affected-row
@@ -1274,7 +1239,7 @@ object MaterializedJoin {
         (rDf, d.lKeys, d.rKeys, d.rCols)
     }
     val lAffB =
-      if (rejoinBroadcastable(spark, vm.joinType, srcBytes)) broadcast(lAff)
+      if (rejoinBroadcastable(vm.joinType, srcBytes)) broadcast(lAff)
       else lAff
     val newRows = joined(lAffB, dimReads, vm.joinType, lAll)
     val post = newRows.select(vm0.schema.fieldNames.map(col): _*)

@@ -74,29 +74,18 @@ object SecondaryIndex {
     dropPins(base, name, keep = Some(toV))
   }
 
-  /** Names of every index registered under `<base-root>/index/`. */
   /** Names of every index registered under `<base-root>/index/` —
-    * snapshot-cached process-wide like the view registries (VERDICT r11
-    * next #1; the freshness-tolerant join serving consults it per
-    * planning attempt): invalidated by every in-process commit under the
-    * base root and by drops; `spark.graft.meta.registryCache=false` opts
-    * out for multi-driver deployments. */
-  def list(base: TableStore): Seq[String] = {
-    val cacheOn = base.spark.conf.getOption("spark.graft.meta.registryCache")
-      .forall(_.toBoolean)
-    if (cacheOn) {
-      val c = TableStore.registryGet("idx", base.memoKey)
-      if (c != null) return c.asInstanceOf[Seq[String]]
-    }
-    val p = new org.apache.hadoop.fs.Path(s"${base.root}/index")
-    val fs = p.getFileSystem(base.spark.sparkContext.hadoopConfiguration)
-    val names =
+    * snapshot-cached process-wide like the view registries
+    * ([[TableStore.registryCached]]; VERDICT r11 next #1: the
+    * freshness-tolerant join serving consults it per planning attempt). */
+  def list(base: TableStore): Seq[String] =
+    TableStore.registryCached("idx", base) {
+      val p = new org.apache.hadoop.fs.Path(s"${base.root}/index")
+      val fs = p.getFileSystem(base.spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(p)) Nil
       else fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
         .filter(n => indexStore(base, n).currentVersion() >= 0).sorted.toSeq
-    if (cacheOn) TableStore.registryPut("idx", base.memoKey, names)
-    names
-  }
+    }
 
   /** Introspection row per index: (name, index keys, indexed base version,
     * current base version) — `stale` = the versions differ. */
@@ -261,6 +250,7 @@ object SecondaryIndex {
     // nets out at the projection, exactly as the classified shape did.
     // Set semantics are sound here: the base is keyed (one live row per
     // primary key).
+    val rescanFrac = TableStore.rescanFraction(base.spark)
     val shared = sharedFrames.collect {
       case (f, t, p, q) if f == fromV && t == toV => (p, q)
     }
@@ -283,12 +273,8 @@ object SecondaryIndex {
       // index up across a span its own router recomputed over): the file
       // diff over-prices point deletes masking many files, and the default
       // replay keeps the pinned bucket-targeted write contract for them.
-      val rescanFrac = base.spark.conf
-        .getOption("spark.graft.agg.refresh.rescanFraction")
-        .map(_.toDouble).getOrElse(0.5)
-      val (ad, rm) = TableStore.changelogFileDiffSizes(base, fromV, toV)
-      if (allowRebuild && math.max(ad, rm).toDouble /
-          math.max(1L, bm.nFiles).toDouble >= rescanFrac) {
+      if (allowRebuild &&
+          TableStore.spanChurn(base, fromV, toV) >= rescanFrac) {
         idx.commitBucketed(
           proj(base.readSnapshot(toV)),
           indexKeys, im.numBuckets, expectedParent = Some(iv),
@@ -345,10 +331,7 @@ object SecondaryIndex {
       // covers ≥ rescanFraction of the buckets, rebuild in ONE clustered
       // O(base) projection instead. Point churn (few buckets) keeps the
       // bucket-targeted replay and its inherited-file contract.
-      val rescanFrac2 = base.spark.conf
-        .getOption("spark.graft.agg.refresh.rescanFraction")
-        .map(_.toDouble).getOrElse(0.5)
-      if (touched.size >= im.numBuckets.toDouble * rescanFrac2) {
+      if (touched.size >= im.numBuckets.toDouble * rescanFrac) {
         idx.commitBucketed(
           proj(base.readSnapshot(toV)),
           indexKeys, im.numBuckets, expectedParent = Some(iv),

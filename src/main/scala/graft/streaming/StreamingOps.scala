@@ -27,6 +27,10 @@ object StreamingOps {
 
   val WatermarkDelay = "10 minutes"
 
+  /** Touched-bucket share above which [[applyCdcBatchAuto]] routes a batch
+    * to equality deletes. */
+  private val AutoEqBucketFraction = 0.5
+
   /** Event-time tumbling counts/sums (streaming `stream_tumbling_window`). */
   def tumbling(events: DataFrame): DataFrame =
     events.withWatermark("ts", WatermarkDelay)
@@ -531,9 +535,9 @@ object StreamingOps {
     *  - schema drift / layout mismatch / bootstrap → COW (the fallback
     *    every mode shares — evolution owns a rewrite anyway);
     *  - SCATTERED batch (touched-bucket fraction above
-    *    `spark.graft.cdc.autoEqBucketFraction`, default 0.5) → EQUALITY
-    *    delete: upsertMor's candidate scan would read most of the table
-    *    for positions, upsertEq reads nothing;
+    *    [[AutoEqBucketFraction]]) → EQUALITY delete: upsertMor's candidate
+    *    scan would read most of the table for positions, upsertEq reads
+    *    nothing;
     *  - bucket-LOCAL batch → positional MOR: the candidate scan is
     *    confined to a few buckets and buys the cheaper positional read
     *    tax (DV anti-join on (file, pos)) instead of the keyed one.
@@ -562,9 +566,6 @@ object StreamingOps {
       applyCdcBatch(batch, store, keys, numBuckets, seqCol, opCol,
         maintenance, props + ("graft.cdc.route" -> "cow"))
     else {
-      val threshold = store.spark.conf
-        .getOption("spark.graft.cdc.autoEqBucketFraction")
-        .map(_.toDouble).getOrElse(0.5)
       // the batch feeds the routing probe AND the routed apply's LWW
       // collapse — persist so its derivation runs once (guide §1.2: the
       // probe otherwise rescans the batch source); O(batch) cache,
@@ -574,7 +575,7 @@ object StreamingOps {
         val touched = batch
           .select(TableStore.bucketExpr(keys, numBuckets).as("b"))
           .distinct().count()
-        if (touched.toDouble / numBuckets > threshold)
+        if (touched.toDouble / numBuckets > AutoEqBucketFraction)
           applyCdcBatchEq(batch, store, keys, numBuckets, seqCol, opCol,
             maintenance, props + ("graft.cdc.route" -> "eq"))
         else

@@ -414,4 +414,27 @@ class AggViewRewriteSpec extends SparkSuite {
       assert(!fired(df))
     } finally spark.conf.set("spark.graft.agg.rewrite", "true")
   }
+
+  test("the serve-rule base: a serve that throws leaves the plan " +
+      "unchanged, and with the switch off serve never runs") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+    var calls = 0
+    val rule = new graft.catalog.ServeRule("spark.graft.agg.rewrite",
+        "probe rewrite") {
+      protected def serve: PartialFunction[LogicalPlan, LogicalPlan] = {
+        case _: Aggregate => calls += 1; throw new IllegalStateException("x")
+      }
+    }
+    val plan = spark.range(10).groupBy(col("id") % 3).count()
+      .queryExecution.optimizedPlan
+    SparkSession.setActiveSession(spark)
+    assert(rule(plan) == plan)
+    assert(calls == 1, "serve must run once, on the one Aggregate")
+    spark.conf.set("spark.graft.agg.rewrite", "false")
+    try {
+      assert(rule(plan) eq plan)
+      assert(calls == 1, "a switched-off rule must never call serve")
+    } finally spark.conf.unset("spark.graft.agg.rewrite")
+  }
 }

@@ -443,17 +443,15 @@ class MaterializedJoinSpec extends SparkSuite {
       dimFiles.size < allDim.size,
       s"tail re-join must bucket-prune the dim: read ${dimFiles.size} " +
         s"of ${allDim.size}")
-    // the pruning kill switch reads the whole dim but stays exact
-    spark.conf.set("spark.graft.agg.rewrite.tail.pruneDims", "false")
-    try {
-      val t2 = MaterializedJoin.storedPlusTail(fact, vm,
-        fact.currentVersion(), Seq(dim.currentVersion())).get
-      assert(canon(t2.frame.select(col("id"), col("fk"), col("amt"),
-        col("attr"))) == recompute(fact, dim, "inner"))
-    } finally {
-      spark.conf.unset("spark.graft.agg.rewrite.tail.pruneDims")
-      spark.conf.unset("spark.graft.agg.rewrite.tail.pruneDimMinFiles")
-    }
+    // at the default file-count gate this toy dim is below it: the
+    // re-join reads every dim file and stays exact
+    spark.conf.unset("spark.graft.agg.rewrite.tail.pruneDimMinFiles")
+    val t2 = MaterializedJoin.storedPlusTail(fact, vm,
+      fact.currentVersion(), Seq(dim.currentVersion())).get
+    assert(canon(t2.frame.select(col("id"), col("fk"), col("amt"),
+      col("attr"))) == recompute(fact, dim, "inner"))
+    assert(t2.frame.inputFiles.filter(_.contains("/dim")).toSet == allDim,
+      "below the file-count gate the re-join must read the whole dim")
   }
 
   test("LEGACY PROPS: a pre-multi-dim view (un-suffixed props) still " +
