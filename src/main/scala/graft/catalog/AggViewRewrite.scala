@@ -53,6 +53,11 @@ import graft.store.{MaterializedAgg, TableStore}
   * sum/count division over the stored partials (integral inputs only,
   * where both sides compute in double).
   *
+  * A small stored snapshot is read from rows held on the driver, and the
+  * rewrite folds over them at plan time into one local relation
+  * ([[HeldViews]]); an aggregate no view serves folds the same way over a
+  * held join-view splice below it.
+  *
   * The rewritten subtree is spliced in with the original Aggregate's
   * output `exprId`s restored, so everything above the aggregate is
   * untouched. Any analysis surprise inside the rewrite aborts it — the
@@ -61,8 +66,11 @@ import graft.store.{MaterializedAgg, TableStore}
 class AggViewRewriteRule
     extends ServeRule("spark.graft.agg.rewrite", "agg-view rewrite") {
 
+  // an aggregate no view serves still folds over a held view snapshot
+  // (the join rule's splice below it)
   protected def serve: PartialFunction[LogicalPlan, LogicalPlan] = {
-    case agg: Aggregate => rewrite(agg).getOrElse(agg)
+    case agg: Aggregate =>
+      rewrite(agg).orElse(HeldViews.fold(agg)).getOrElse(agg)
   }
 
   /** Peel Projects / deterministic subquery-free Filters between the
@@ -248,7 +256,9 @@ class AggViewRewriteRule
     * `serve` picks the row source ([[AggViewRewrite.Serve]]): the stored
     * snapshot, stored ∪ the base's signed changelog tail, or stored
     * merged with the join splice's row delta (where MIN/MAX can never
-    * serve — a delta cannot retract extrema). */
+    * serve — a delta cannot retract extrema). A small stored snapshot is
+    * read from rows held on the driver, and the rewrite folds over them
+    * at plan time ([[HeldViews]]). */
   private def rewriteWith(agg: Aggregate, groupingX: Seq[Expression],
       outputsX: Seq[(Expression, String)], conds: Seq[Expression],
       store: TableStore, vm: MaterializedAgg.ViewMeta,
@@ -437,7 +447,14 @@ class AggViewRewriteRule
     // for any other aggregate, so the memoized subplan is never spliced
     // twice into one plan (see MaterializedAgg.storedPlusTail)
     val reuseTok = agg.aggregateExpressions.map(_.exprId.id).mkString(",")
-    val raw0 = serve match {
+    // COUNT(DISTINCT) joins its companions: it keeps the scans
+    val held = serve match {
+      case AggViewRewrite.ServeStored if dcAggs.isEmpty =>
+        HeldViews.read(MaterializedAgg.aggStore(store, vm.name),
+          vm.viewVersion)
+      case _ => None
+    }
+    val raw0 = held.getOrElse(serve match {
       case AggViewRewrite.ServeTail(toV) =>
         MaterializedAgg.storedPlusTail(store, vm, toV, reuseTok) match {
           case Some(df) => df
@@ -448,7 +465,7 @@ class AggViewRewriteRule
       case AggViewRewrite.ServeStored =>
         MaterializedAgg.aggStore(store, vm.name)
           .readSnapshot(vm.viewVersion)
-    }
+    })
     val raw = (viewConds.flatten ++ deltaConds).foldLeft(raw0)((df, c) =>
       df.filter(ColumnBridge.column(c)))
     val flat: DataFrame =
@@ -493,7 +510,11 @@ class AggViewRewriteRule
         .withColumn(ph, coalesce(col(ph), lit(0L)))
     }
     val rep = withDc.select(outCols: _*)
-    val repPlan = rep.queryExecution.optimizedPlan
+    // held rows splice the analyzed plan for the splice to fold: Spark's
+    // nested optimizer would fold Filter/Project into untagged relations
+    val repPlan =
+      if (held.isEmpty) rep.queryExecution.optimizedPlan
+      else rep.queryExecution.analyzed
     if (repPlan.output.size != agg.output.size ||
         repPlan.output.zip(agg.output).exists {
           case (n, o) => n.dataType != o.dataType
@@ -505,10 +526,7 @@ class AggViewRewriteRule
     logInfo(s"rewrote aggregate over ${store.root} to view '${vm.name}'" +
       (if (exact) " (exact keys)" else " (re-aggregated)") +
       (if (isDelta) " (stacked over join tail)" else ""))
-    Some(Project(agg.output.zip(repPlan.output).map { case (o, n) =>
-      Alias(n, o.name)(exprId = o.exprId, qualifier = o.qualifier,
-        explicitMetadata = Some(o.metadata))
-    }, repPlan))
+    Some(HeldViews.splice(agg.output, repPlan))
   }
 }
 
@@ -517,9 +535,12 @@ object AggViewRewrite {
     * (or join) view? Checked against the optimized plan's RELATION PATHS
     * (plan-string greps are unreliable: InMemoryFileIndex truncates long
     * locations and the exact-key rewrite's placeholder aliases collapse
-    * away). */
+    * away), or against the view root a held snapshot's folded relation
+    * carries ([[HeldViews]]). */
   def served(df: DataFrame, marker: String = "/agg/"): Boolean =
     df.queryExecution.optimizedPlan.exists {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        l.getTagValue(HeldViews.RootTag).exists(_.contains(marker))
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         l.relation match {
           case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>

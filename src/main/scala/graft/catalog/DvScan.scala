@@ -17,9 +17,10 @@ import graft.store.TableStore
   * internal-row RDD. `buildScan` runs during physical planning and calls
   * `toRdd`, so the masks are MATERIALIZED AT PLAN TIME: their sub-plans
   * execute on every plan of every query. Small masks (under the broadcast
-  * gate) are therefore memoized per delete-file set
-  * ([[TableStore.maskMemo]]): the first plan over a delete set reads its
-  * files, later plans broadcast the memoized rows and read no delete file.
+  * gate) are therefore memoized per delete-file set in the shared memo of
+  * small row sets held on the driver ([[TableStore.rowMemo]], which also
+  * holds small view snapshots): the first plan over a delete set reads its
+  * files, later plans broadcast the held rows and read no delete file.
   * The scan also loses whole-stage fusion with the parent plan (one extra
   * exchange-free pipeline break) until
   * [[TableStore#purgeDeletes]]/[[TableStore#compact]] folds the deletes in

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.graftbridge.{ColumnBridge, DatasetBridge, ParquetTableBridge}
 
-import graft.store.{MaterializedJoin, TableStore}
+import graft.store.{MaterializedAgg, MaterializedJoin, TableStore}
 
 /** Transparent JOIN-VIEW REWRITE: a user's `fact JOIN dim1 [JOIN dim2 …]`
   * over the catalog tables answers from a fresh [[MaterializedJoin]]
@@ -46,9 +46,12 @@ import graft.store.{MaterializedJoin, TableStore}
   * join for the view scan, then the next fixpoint iteration answers the
   * aggregate from a STACKED aggregate view over the join view —
   * O(groups), the reference's own dashboard shape (README.md:170-173)
-  * served end-to-end from derivatives (VERDICT r9 missing #1). The splice
-  * restores the original output exprIds, so the plan above is untouched;
-  * any surprise declines, never fails. Shares the
+  * served end-to-end from derivatives (VERDICT r9 missing #1). A small
+  * view with nothing stacked on it splices its snapshot as rows held on
+  * the driver instead ([[HeldViews]]): the splice folds to a local
+  * relation, and so does the aggregate above it, with no Spark job. The
+  * splice restores the original output exprIds, so the plan above is
+  * untouched; any surprise declines, never fails. Shares the
   * `spark.graft.agg.rewrite` kill switch.
   *
   * FRESHNESS-TOLERANT serving (same knobs as the aggregate rule): when no
@@ -313,7 +316,7 @@ class JoinViewRewriteRule
     // ---- exact: every scanned snapshot equals its watermark ------------
     val exactHit = cands(_ == lm.version, _ == _).view.flatMap {
       case (vm, legDims) =>
-        attempt(vm, legDims, JoinViewRewrite.viewScanDf(lStore, vm), "")
+        attempt(vm, legDims, JoinViewRewrite.viewDf(lStore, vm), "")
     }.headOption
     if (exactHit.isDefined) return exactHit
     // ---- FRESHNESS-TOLERANT serving (mirrors AggViewRewriteRule) ------
@@ -403,16 +406,18 @@ class JoinViewRewriteRule
             }
           }
           .flatMap { case (vm, legDims) =>
-            attempt(vm, legDims, JoinViewRewrite.viewScanDf(lStore, vm),
+            attempt(vm, legDims, JoinViewRewrite.viewDf(lStore, vm),
               " (stale within budget)")
           }.headOption
       }
     }
   }
 
-  /** `raw0` is the serving source the caller picked: the view's DSv2
-    * snapshot scan (exact / budget-stale serving) or the lazily-evaluated
-    * stored∪tail frame; `how` tags the log line. `tail` (set with the
+  /** `raw0` is the serving source the caller picked: the view's stored
+    * snapshot (exact / budget-stale serving: held rows, which the splice
+    * folds over at plan time, or the DSv2 snapshot scan) or the
+    * lazily-evaluated stored∪tail frame; `how` tags the log line. `tail`
+    * (set with the
     * stored∪tail source) pins a [[JoinViewRewrite.TailInfo]] tag on the
     * frame's root so [[AggViewRewriteRule]] can compose a STACKED
     * aggregate above the stale star: its peel stops at the tag and merges
@@ -504,8 +509,10 @@ class JoinViewRewriteRule
     val raw = viewConds.flatten.foldLeft(raw0t)((df, c) =>
       df.filter(ColumnBridge.column(c)))
     val rep: DataFrame = raw.select(outCols.flatten: _*)
+    // held rows splice the analyzed plan too, for the splice to fold
     val repPlan =
-      if (tail.isDefined) rep.queryExecution.analyzed
+      if (tail.isDefined || raw0.queryExecution.analyzed
+          .getTagValue(HeldViews.RootTag).isDefined) rep.queryExecution.analyzed
       else rep.queryExecution.optimizedPlan
     if (repPlan.output.size != origOutput.size ||
         repPlan.output.zip(origOutput).exists {
@@ -518,10 +525,7 @@ class JoinViewRewriteRule
     logInfo(s"rewrote ${legs.size}-dim join over ${lStore.root} to view " +
       s"'${vm.name}'" +
       (if (semi) " (semi)" else if (outer) " (left)" else "") + how)
-    Some(Project(origOutput.zip(repPlan.output).map { case (o, n) =>
-      Alias(n, o.name)(exprId = o.exprId, qualifier = o.qualifier,
-        explicitMetadata = Some(o.metadata))
-    }, repPlan))
+    Some(HeldViews.splice(origOutput, repPlan))
   }
 }
 
@@ -558,6 +562,19 @@ object JoinViewRewrite {
     import org.apache.spark.sql.catalyst.optimizer.{EliminateResolvedHint, ReplaceDeduplicateWithAggregate, ReplaceDistinctWithAggregate}
     ReplaceDeduplicateWithAggregate(
       ReplaceDistinctWithAggregate(EliminateResolvedHint(p)))
+  }
+
+  /** The view's stored snapshot to splice: rows held on the driver when
+    * the snapshot is small ([[HeldViews.read]]) and no aggregate or join
+    * view is stacked on this view, else [[viewScanDf]] — a stacked view
+    * composes above the snapshot scan only. */
+  private[catalog] def viewDf(lStore: TableStore,
+      vm: MaterializedJoin.ViewMeta): DataFrame = {
+    val st = MaterializedJoin.viewStore(lStore, vm.name)
+    val stacked = MaterializedAgg.viewMetas(st).nonEmpty ||
+      MaterializedJoin.viewMetas(st).nonEmpty
+    (if (stacked) None else HeldViews.read(st, vm.viewVersion))
+      .getOrElse(viewScanDf(lStore, vm))
   }
 
   /** A DataFrame over the join-view store as a DSv2 snapshot relation —

@@ -802,16 +802,14 @@ class TableStore(val spark: SparkSession, val root: String,
     * `DvV1Scan.buildScan` materializes the mask at PLAN time: read from
     * the files, every catalog query over a masked snapshot pays a Spark
     * job (plus the equality side's shuffle) for the same rows. A set
-    * under [[dvBroadcastThreshold]] and [[TableStore.MaskMemoMaxRows]]
-    * metadata rows is therefore collected ONCE into a process-wide memo
-    * ([[TableStore.maskMemo]]) and broadcast from a local relation of
-    * those rows — the same rows the broadcast pulls to the driver on every
-    * query anyway. Above the byte gate the shuffled join is unchanged.
-    * `key` names the delete set (mask kind, key columns, read schema,
-    * sorted files with each equality ref's `since`); the memo
-    * follows the manifest memo's conf and invalidation ([[manifest]],
-    * [[TableStore.invalidateMeta]]). Every mask built from the files
-    * rather than the memo counts in [[TableStore.maskLoads]]. */
+    * under [[dvBroadcastThreshold]] is therefore held on the driver
+    * ([[heldRows]], the shared small-row-set memo) and broadcast from a
+    * local relation of those rows — the same rows the broadcast pulls to
+    * the driver on every query anyway. Above the byte gate the shuffled
+    * join is unchanged. `key` names the delete set (mask kind, key
+    * columns, read schema, sorted files with each equality ref's
+    * `since`). Every mask built from the files rather than the memo
+    * counts in [[TableStore.maskLoads]]. */
   private def maskProbe(key: String, bytes: Long, rows: Long,
       dels: => DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
@@ -819,26 +817,61 @@ class TableStore(val spark: SparkSession, val root: String,
       TableStore.maskLoads.incrementAndGet()
       return dels
     }
-    val memoOn = rows <= TableStore.MaskMemoMaxRows &&
-      spark.conf.getOption("spark.graft.meta.manifestCache")
-        .forall(_.toBoolean)
-    if (!memoOn) {
+    heldRows("mask", key, rows) {
       TableStore.maskLoads.incrementAndGet()
-      return broadcast(dels)
+      dels
+    } match {
+      // fresh attribute ids per use: one query may mask the same set twice
+      case Some(rel) => broadcast(org.apache.spark.sql.graftbridge
+        .DatasetBridge.ofRows(spark, rel.newInstance()))
+      case None =>
+        TableStore.maskLoads.incrementAndGet()
+        broadcast(dels)
     }
-    val mKey = (epochMemoKey, key)
-    val rel = Option(TableStore.maskMemo.get(mKey)).getOrElse {
-      TableStore.maskLoads.incrementAndGet()
-      val d = dels
-      val l = org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+  }
+
+  /** A small immutable row set of this store, held on the driver: the
+    * rows `load` reads, memoized process-wide in [[TableStore.rowMemo]]
+    * under (epochMemoKey, `kind`, `key`). `key` must name rows that never
+    * change (write-once delete files, a committed snapshot version). None
+    * — the caller reads the files itself — when `rows` (a metadata count,
+    * checked before any read) exceeds [[TableStore.MaskMemoMaxRows]] or
+    * `spark.graft.meta.manifestCache=false`. A miss loads outside the map
+    * (get, then put): a Spark job never runs inside a map operation. */
+  private def heldRows(kind: String, key: String, rows: Long)(
+      load: => DataFrame)
+      : Option[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] = {
+    if (rows > TableStore.MaskMemoMaxRows ||
+        !spark.conf.getOption("spark.graft.meta.manifestCache")
+          .forall(_.toBoolean)) return None
+    val mKey = (epochMemoKey, kind, key)
+    Option(TableStore.rowMemo.get(mKey)).orElse {
+      val d = load
+      val ext = org.apache.spark.sql.catalyst.plans.logical.LocalRelation
         .fromExternalRows(org.apache.spark.sql.catalyst.types.DataTypeUtils
           .toAttributes(d.schema), d.collect().toSeq)
-      TableStore.maskMemoPut(mKey, l)
-      l
+      // held as unsafe rows, more compact than the boxed external rows
+      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+        .create(ext.output, ext.output)
+      val l = ext.copy(data = ext.data.map(proj(_).copy()))
+      TableStore.rowMemoPut(mKey, l)
+      Some(l)
     }
-    // fresh attribute ids per use: one query may mask the same set twice
-    broadcast(org.apache.spark.sql.graftbridge.DatasetBridge
-      .ofRows(spark, rel.newInstance()))
+  }
+
+  /** Snapshot `version` as rows held on the driver ([[heldRows]], kind
+    * `view`) — the view rewrites serve a small view snapshot from these
+    * and fold the query over them at plan time. Gated before any read on
+    * the manifest's totals: at most [[TableStore.MaskMemoMaxRows]] rows
+    * and [[TableStore.BroadcastBytes]] bytes, with stats on every file.
+    * None past the gate or with the memo off. */
+  private[graft] def heldSnapshot(version: Long)
+      : Option[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] = {
+    val m = manifest(version)
+    val counted = m.isSharded || m.inlineFiles.forall(m.inlineStats.contains)
+    if (!counted || m.totalBytes > TableStore.BroadcastBytes) None
+    else heldRows("view", version.toString, m.totalRows)(
+      readSnapshot(version))
   }
 
   /** Effective-rows filter for delete-vector snapshots: drop every
@@ -4901,35 +4934,43 @@ object TableStore {
     (String, Long, String),
     Seq[org.apache.spark.sql.graftbridge.StatsScanBridge.FileRef]]
 
-  /** Process-wide delete-mask memo ([[TableStore#maskProbe]]):
-    * (epochMemoKey, delete-set key) → the mask rows as a local relation.
-    * Delete files are write-once, so the key identifies the rows. Sets
-    * above [[MaskMemoMaxRows]] metadata rows never enter; the memo is
-    * cleared wholesale past 64 entries or [[MaskMemoMaxRows]] held rows,
-    * and invalidated with the manifest memo. */
-  private[graft] val maskMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String),
+  /** Process-wide memo of small immutable row sets held on the driver
+    * ([[TableStore#heldRows]]): (epochMemoKey, kind, key) → the rows as a
+    * local relation. Two kinds share it: `mask` (delete masks,
+    * [[TableStore#maskProbe]]) and `view` (view snapshots the view
+    * rewrites serve and fold, [[TableStore#heldSnapshot]]). Sets above
+    * [[MaskMemoMaxRows]] rows never enter; the memo is cleared wholesale
+    * past 64 entries or [[MaskMemoMaxRows]] held rows, and invalidated
+    * with the manifest memo. */
+  private[graft] val rowMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, String),
     org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
 
-  /** Row budget of [[maskMemo]], per entry and in total. */
+  /** Row budget of [[rowMemo]], per entry and in total. */
   private[graft] val MaskMemoMaxRows = 250000L
 
-  private[graft] def maskMemoPut(k: (String, String),
-      rel: org.apache.spark.sql.catalyst.plans.logical.LocalRelation): Unit = {
+  /** Rows [[rowMemo]] holds. */
+  private[graft] def rowMemoRows: Long = {
     import scala.jdk.CollectionConverters._
+    rowMemo.values.asScala.map(_.data.size.toLong).sum
+  }
+
+  private[graft] def rowMemoPut(k: (String, String, String),
+      rel: org.apache.spark.sql.catalyst.plans.logical.LocalRelation)
+      : Unit = rowMemo.synchronized {
     val n = rel.data.size.toLong
-    if (maskMemo.size > 64 ||
-        maskMemo.values.asScala.map(_.data.size.toLong).sum + n >
-          MaskMemoMaxRows) maskMemo.clear()
-    if (n <= MaskMemoMaxRows) maskMemo.put(k, rel)
+    if (rowMemo.size > 64 || rowMemoRows + n > MaskMemoMaxRows)
+      rowMemo.clear()
+    if (n <= MaskMemoMaxRows) rowMemo.put(k, rel)
     ()
   }
 
   /** Drop every process-wide metadata memo entry under `memoKeyPrefix` —
-    * the manifest cache, the span memos, the delete masks, and the
-    * derivative-registry snapshots. Called by every path that DELETES or
-    * RENUMBERS committed metadata, where a later re-creation could reuse a
-    * (store, version) key with different content: DROP/RENAME TABLE (the
+    * the manifest cache, the span memos, the held row sets (delete masks
+    * and view snapshots), and the derivative-registry snapshots. Called by
+    * every path that DELETES or RENUMBERS committed metadata, where a later
+    * re-creation could reuse a (store, version) key with different
+    * content: DROP/RENAME TABLE (the
     * bench/test reality of drop-and-recreate at one root),
     * MaterializedJoin/Agg/SecondaryIndex drops, dropBranch (+ recreate
     * restarts branch numbering), rebase and
@@ -4948,7 +4989,7 @@ object TableStore {
     registryDropIf(k => hit(k._2))
     classifyMemo.keySet.removeIf(k => hit(k._1))
     pruneMemo.keySet.removeIf(k => hit(k._1))
-    maskMemo.keySet.removeIf(k => hit(k._1))
+    rowMemo.keySet.removeIf(k => hit(k._1))
   }
 
   /** Process-wide derivative-REGISTRY snapshots (join/agg-view and index
@@ -5064,7 +5105,7 @@ object TableStore {
   /** Delete-mask load counter — test instrumentation for the mask memo
     * contract (repeated planning over one delete set must not re-read its
     * files): counts every mask [[TableStore#maskProbe]] builds from
-    * delete files rather than from [[maskMemo]]. */
+    * delete files rather than from [[rowMemo]]. */
   private[graft] val maskLoads =
     new java.util.concurrent.atomic.AtomicLong
 

@@ -408,44 +408,46 @@ class MaterializedJoinSpec extends SparkSuite {
     // the file-count gate skips pruning for toy dims; force it on so the
     // pruned plan SHAPE is pinned here
     spark.conf.set("spark.graft.agg.rewrite.tail.pruneDimMinFiles", "1")
-    val (fact, dim) = fresh()
-    fact.commitBucketed((1L to 300L).map(i =>
-      (i, i % 40, i * 10)).toDF("id", "fk", "amt"), Seq("id"), 8)
-    // dim covers only 0..35: fact rows with fk 36..39 are inner-unmatched
-    // and ABSENT from the stored view
-    dim.commitBucketed((0L to 35L).map(k =>
-      (k, s"a$k")).toDF("k", "attr"), Seq("k"), 16)
-    MaterializedJoin.create(fact, "jv", dim, Seq("fk"), Seq("k"),
-      Seq("attr"))
-    val idxSt = SecondaryIndex.indexStore(fact, "join-jv")
-    val (vvB, ivB) = (MaterializedJoin.viewStore(fact, "jv")
-      .currentVersion(), idxSt.currentVersion())
-    // dim churn only, NO refresh: a projected update + NEW keys — the
-    // new-key fact rows must be found via the covering index even though
-    // the stored view never carried them
-    dim.upsertEq((Seq((3L, "a3_v2")) ++ (36L to 39L).map(k =>
-      (k, s"new$k"))).toDF("k", "attr").withColumn("op", lit("PUT")))
-    val vm = MaterializedJoin.viewMeta(fact, "jv").get
-    val t = MaterializedJoin.storedPlusTail(fact, vm,
-      fact.currentVersion(), Seq(dim.currentVersion())).get
-    assert(canon(t.frame.select(col("id"), col("fk"), col("amt"),
-      col("attr"))) == recompute(fact, dim, "inner"),
-      "dim-churn tail must equal a recompute at the scanned snapshots")
-    // a READ path commits nothing — view and index stores untouched
-    assert(MaterializedJoin.viewStore(fact, "jv").currentVersion() == vvB
-      && idxSt.currentVersion() == ivB)
-    // the re-join reads a strict subset of the dim's files (the changed
-    // keys' buckets), not the whole dim — the refresh economy on the
-    // read path (VERDICT r10 missing #3)
-    val dimFiles = t.frame.inputFiles.filter(_.contains("/dim")).toSet
-    val allDim = dim.readSnapshot().inputFiles.toSet
-    assert(dimFiles.nonEmpty && dimFiles.subsetOf(allDim) &&
-      dimFiles.size < allDim.size,
-      s"tail re-join must bucket-prune the dim: read ${dimFiles.size} " +
-        s"of ${allDim.size}")
+    val (fact, dim, vm, allDim) = try {
+      val (fact, dim) = fresh()
+      fact.commitBucketed((1L to 300L).map(i =>
+        (i, i % 40, i * 10)).toDF("id", "fk", "amt"), Seq("id"), 8)
+      // dim covers only 0..35: fact rows with fk 36..39 are inner-unmatched
+      // and ABSENT from the stored view
+      dim.commitBucketed((0L to 35L).map(k =>
+        (k, s"a$k")).toDF("k", "attr"), Seq("k"), 16)
+      MaterializedJoin.create(fact, "jv", dim, Seq("fk"), Seq("k"),
+        Seq("attr"))
+      val idxSt = SecondaryIndex.indexStore(fact, "join-jv")
+      val (vvB, ivB) = (MaterializedJoin.viewStore(fact, "jv")
+        .currentVersion(), idxSt.currentVersion())
+      // dim churn only, NO refresh: a projected update + NEW keys — the
+      // new-key fact rows must be found via the covering index even though
+      // the stored view never carried them
+      dim.upsertEq((Seq((3L, "a3_v2")) ++ (36L to 39L).map(k =>
+        (k, s"new$k"))).toDF("k", "attr").withColumn("op", lit("PUT")))
+      val vm = MaterializedJoin.viewMeta(fact, "jv").get
+      val t = MaterializedJoin.storedPlusTail(fact, vm,
+        fact.currentVersion(), Seq(dim.currentVersion())).get
+      assert(canon(t.frame.select(col("id"), col("fk"), col("amt"),
+        col("attr"))) == recompute(fact, dim, "inner"),
+        "dim-churn tail must equal a recompute at the scanned snapshots")
+      // a READ path commits nothing — view and index stores untouched
+      assert(MaterializedJoin.viewStore(fact, "jv").currentVersion() == vvB
+        && idxSt.currentVersion() == ivB)
+      // the re-join reads a strict subset of the dim's files (the changed
+      // keys' buckets), not the whole dim — the refresh economy on the
+      // read path (VERDICT r10 missing #3)
+      val dimFiles = t.frame.inputFiles.filter(_.contains("/dim")).toSet
+      val allDim = dim.readSnapshot().inputFiles.toSet
+      assert(dimFiles.nonEmpty && dimFiles.subsetOf(allDim) &&
+        dimFiles.size < allDim.size,
+        s"tail re-join must bucket-prune the dim: read ${dimFiles.size} " +
+          s"of ${allDim.size}")
+      (fact, dim, vm, allDim)
+    } finally spark.conf.unset("spark.graft.agg.rewrite.tail.pruneDimMinFiles")
     // at the default file-count gate this toy dim is below it: the
     // re-join reads every dim file and stays exact
-    spark.conf.unset("spark.graft.agg.rewrite.tail.pruneDimMinFiles")
     val t2 = MaterializedJoin.storedPlusTail(fact, vm,
       fact.currentVersion(), Seq(dim.currentVersion())).get
     assert(canon(t2.frame.select(col("id"), col("fk"), col("amt"),
