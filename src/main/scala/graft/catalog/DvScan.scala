@@ -12,17 +12,19 @@ import graft.store.TableStore
   * A DSv2 parquet scan has no row-position hook, so a DV'd snapshot is
   * served through Spark's V1Scan fallback (the JDBC-source pattern): the
   * relation builds the effective-rows DataFrame via
-  * [[TableStore#readFiles]] — stats/bucket file pruning plus the broadcast
-  * delete-vector and equality-delete anti-joins — and hands Spark its
-  * internal-row RDD. `buildScan` runs during physical planning and calls
-  * `toRdd`, so the masks are MATERIALIZED AT PLAN TIME: their sub-plans
-  * execute on every plan of every query. Small masks (under the broadcast
-  * gate) are therefore memoized per delete-file set in the shared memo of
-  * small row sets held on the driver ([[TableStore.rowMemo]], which also
-  * holds small view snapshots): the first plan over a delete set reads its
-  * files, later plans broadcast the held rows and read no delete file.
-  * The scan also loses whole-stage fusion with the parent plan (one extra
-  * exchange-free pipeline break) until
+  * [[TableStore#readFiles]] — stats/bucket file pruning plus the delete
+  * masks — and hands Spark its internal-row RDD. `buildScan` runs during
+  * physical planning and calls `toRdd`, so whatever the mask plan
+  * materializes runs at PLAN time, on every plan of every query. Small
+  * masks (under the broadcast gate) are therefore held on the driver per
+  * delete-file set, in the shared memo of small row sets
+  * ([[TableStore.rowMemo]], which also holds small view snapshots), and
+  * applied inside the scan as one per-row probe shipped as a Spark
+  * broadcast ([[graft.store.HeldMaskKeep]]): the first plan over a delete
+  * set reads its files, later plans run no Spark job at all. Masks past
+  * the gate keep the anti-join over their files. The scan also loses
+  * whole-stage fusion with the parent plan (one extra exchange-free
+  * pipeline break) until
   * [[TableStore#purgeDeletes]]/[[TableStore#compact]] folds the deletes in
   * and the table returns to the byte-stock DSv2 path — the deliberate MOR
   * trade. Filters all stay post-scan (same conservative contract as the

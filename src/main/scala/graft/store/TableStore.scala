@@ -657,7 +657,7 @@ class TableStore(val spark: SparkSession, val root: String,
       withPos: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.col
     val eff =
-      if (m.hasDeletes || withPos) eqFilter(dvFilter(tagPos(raw), m), m)
+      if (m.hasDeletes || withPos) maskFilter(tagPos(raw), m)
       else raw
     val out = m.schema.fieldNames.map(col) ++
       (if (withPos) Seq(col("_g_file"), col("_g_pos")) else Nil)
@@ -678,49 +678,83 @@ class TableStore(val spark: SparkSession, val root: String,
         f.nullable)).toSeq)
   }
 
-  /** Effective-rows filter for EQUALITY deletes: drop every row whose
-    * bucket-key values appear in an [[TableStore.EqRef]] file with `since`
-    * NEWER than the row's data file's commit version (derived from the
-    * `snap-<v>-` path segment — pure column arithmetic, no extra I/O).
-    * Stacked deletes of the same key collapse to `max(since)` before the
-    * join, so the probe is one row per deleted key. Small delete sets are
-    * broadcast (keyed map-side anti-join, corpus never shuffles); past
-    * [[dvBroadcastThreshold]] the hint drops, same discipline as
-    * [[dvFilter]]. `tagged` must carry `_g_file`. */
-  private def eqFilter(tagged: DataFrame, m: Manifest): DataFrame =
-    if (!m.hasEqDeletes) tagged
-    else {
-      import org.apache.spark.sql.functions._
-      val withV0 = tagged.withColumn("_g_snapv",
-        regexp_extract(col("_g_file"), "/snap-(\\d+)-", 1).cast("long"))
-      // REBASED files ([[rebaseBranch]]) carry a manifest-assigned commit
-      // version overriding the path-derived one — the replay re-homes a
-      // file logically without moving bytes. O(rebased files) entries,
-      // broadcast map-side join, corpus never shuffles.
-      val withV =
-        if (m.fileVersions.isEmpty) withV0
-        else {
-          val ov = spark.createDataFrame(m.fileVersions.toSeq)
-            .toDF("_g_ovf", "_g_ovv")
-          withV0.join(broadcast(ov), withV0("_g_file") === col("_g_ovf"), "left")
-            .withColumn("_g_snapv",
-              coalesce(col("_g_ovv"), col("_g_snapv")))
-            .drop("_g_ovf", "_g_ovv")
-        }
-      // one anti-join per distinct key-column set: full-key refs (cols
-      // empty) key on the bucket keys, PARTIAL-KEY refs mask by their
-      // recorded column subset — stacked sets compose (a row survives only
-      // if no delete of any shape masks it)
-      val groups = m.eqRefs
-        .groupBy(r => if (r.cols.nonEmpty) r.cols else m.bucketKeys)
-        .toSeq.sortBy(_._1.mkString(","))
-      groups.foldLeft(withV) { case (df, (cols, refs)) =>
-        val probe = eqProbe(m, cols, refs)
-        val cond = cols.map(k => df(k) === probe(k)).reduce(_ && _) &&
-          df("_g_snapv") < probe("_eq_since")
-        df.join(probe, cond, "left_anti")
-      }.drop("_g_snapv")
+  /** Effective-rows filter of a masked snapshot: drop every row a delete
+    * vector names by `(file, pos)`, and every row whose bucket-key values
+    * appear in an [[TableStore.EqRef]] file with `since` NEWER than the
+    * row's data file's commit version (the rebase override, else the
+    * `snap-<v>-` path segment: [[HeldMask.fileVersion]]). Stacked deletes
+    * of one key collapse to `max(since)`, so each equality probe holds one
+    * entry per deleted key; full-key refs key on the bucket keys,
+    * PARTIAL-KEY refs on their recorded column subset, and the sets
+    * compose (a row survives only if no delete of any shape masks it).
+    * Positions are file-absolute (parquet row index), so the DV match is
+    * exact under splits, row-group skipping and any task layout.
+    *
+    * Masks held on the driver ([[maskProbe]]) apply as ONE in-scan
+    * predicate ([[HeldMaskKeep]]): planning runs no Spark job and the
+    * corpus never shuffles. A mask not held (past
+    * [[dvBroadcastThreshold]] or [[TableStore.MaskMemoMaxRows]], or with
+    * `spark.graft.meta.manifestCache=false`) anti-joins the rows read from
+    * its files: broadcast-hinted under the byte gate, shuffled above it
+    * (a broad `deleteMor` must not OOM the driver). `tagged` must carry
+    * `_g_file`/`_g_pos` (see [[tagPos]]). */
+  private def maskFilter(tagged: DataFrame, m: Manifest): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val dv = if (m.hasDvs) Some(dvProbe(m.dvRefs)) else None
+    val eqs = m.eqRefs
+      .groupBy(r => if (r.cols.nonEmpty) r.cols else m.bucketKeys)
+      .toSeq.sortBy(_._1.mkString(","))
+      .map { case (cols, refs) => cols -> eqProbe(m, cols, refs) }
+    val heldEq = eqs.collect { case (cols, Left(p)) => cols -> p }
+    val ov = versionOverrides(m)
+    val kept =
+      if (dv.forall(_.isRight) && heldEq.isEmpty) tagged
+      else tagged.filter(heldKeep(dv.flatMap(_.left.toOption), heldEq, ov))
+    val afterDv = dv match {
+      case Some(Right(probe)) => kept.join(probe,
+        kept("_g_file") === probe("file_path") &&
+          kept("_g_pos") === probe("pos"), "left_anti")
+      case _ => kept
     }
+    val fileEq = eqs.collect { case (cols, Right(p)) => cols -> p }
+    if (fileEq.isEmpty) afterDv
+    else fileEq.foldLeft(afterDv.withColumn("_g_snapv",
+        fileVersionCol(col("_g_file"), ov))) { case (df, (cols, probe)) =>
+      val cond = cols.map(k => df(k) === probe(k)).reduce(_ && _) &&
+        df("_g_snapv") < probe("_eq_since")
+      df.join(probe, cond, "left_anti")
+    }.drop("_g_snapv")
+  }
+
+  /** The rebase version overrides of `m` ([[rebaseBranch]]), shipped as a
+    * broadcast when there are any: O(rebased files), read once per task. */
+  private def versionOverrides(m: Manifest)
+      : Option[org.apache.spark.broadcast.Broadcast[Map[String, Long]]] =
+    if (m.fileVersions.isEmpty || !m.hasEqDeletes) None
+    else Some(spark.sparkContext.broadcast(m.fileVersions))
+
+  /** The commit version of the data file `file` names ([[FileVersion]]). */
+  private def fileVersionCol(file: org.apache.spark.sql.Column,
+      ov: Option[org.apache.spark.broadcast.Broadcast[Map[String, Long]]])
+      : org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(FileVersion(ColumnBridge.expression(file), ov))
+  }
+
+  /** The keep-row predicate of held masks ([[HeldMaskKeep]]). */
+  private def heldKeep(
+      dv: Option[org.apache.spark.broadcast.Broadcast[HeldMask.DvProbe]],
+      eqs: Seq[(Seq[String],
+        org.apache.spark.broadcast.Broadcast[HeldMask.EqProbe])],
+      ov: Option[org.apache.spark.broadcast.Broadcast[Map[String, Long]]])
+      : org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val cols = Seq("_g_file") ++ dv.map(_ => "_g_pos") ++ eqs.flatMap(_._1)
+    ColumnBridge.column(HeldMaskKeep(
+      cols.map(c => ColumnBridge.expression(col(c))), dv, eqs.map(_._2),
+      eqs.map(_._1.size), ov))
+  }
 
   private def resolveVersion(version: Long): Long = {
     val v = if (version >= 0) version else currentVersion()
@@ -769,16 +803,24 @@ class TableStore(val spark: SparkSession, val root: String,
       .map(_.toLong).getOrElse(TableStore.BroadcastBytes)
 
   /** The keys of the equality deletes `refs` over `cols`, collapsed to
-    * `max(since)` per key — the probe side of [[eqFilter]] and of the
-    * narrow changelog's newly-masked join. */
-  private def eqProbe(m: Manifest, cols: Seq[String],
-      refs: Seq[EqRef]): DataFrame = {
+    * `max(since)` per key — the probe side of [[maskFilter]] and of the
+    * narrow changelog's newly-masked filter. Held keys are compared as
+    * unsafe-row bytes, so a key type whose equality is not binary (a
+    * collated string) always takes the file-read join. */
+  private def eqProbe(m: Manifest, cols: Seq[String], refs: Seq[EqRef])
+      : Either[org.apache.spark.broadcast.Broadcast[HeldMask.EqProbe],
+        DataFrame] = {
     import org.apache.spark.sql.functions.{col, lit, max}
     val readSchema = eqKeySchema(m, cols)
+    val binaryKeys = readSchema.fields.forall(f =>
+      org.apache.spark.sql.catalyst.util.UnsafeRowUtils
+        .isBinaryStable(f.dataType))
     maskProbe(
       s"eq|${cols.mkString(",")}|${readSchema.catalogString}|" +
         refs.map(r => s"${r.path}:${r.since}").sorted.mkString(","),
-      refs.map(_.bytes).sum, refs.map(_.rows).sum,
+      refs.map(_.bytes).sum,
+      if (binaryKeys) refs.map(_.rows).sum else Long.MaxValue,
+      HeldMask.eqProbe,
       refs.map { r =>
         spark.read.schema(readSchema).parquet(r.path)
           .withColumn("_eq_since", lit(r.since))
@@ -788,45 +830,48 @@ class TableStore(val spark: SparkSession, val root: String,
   }
 
   /** The `(file_path, pos)` entries of the delete vectors `refs` — the
-    * probe side of [[dvFilter]] and of the narrow changelog's
-    * newly-masked join. */
-  private def dvProbe(refs: Seq[DvRef]): DataFrame =
+    * probe side of [[maskFilter]] and of the narrow changelog's
+    * newly-masked filter. */
+  private def dvProbe(refs: Seq[DvRef])
+      : Either[org.apache.spark.broadcast.Broadcast[HeldMask.DvProbe],
+        DataFrame] =
     maskProbe(
       s"dv|${TableStore.DvSchema.catalogString}|" +
         refs.map(_.path).sorted.mkString(","),
-      refs.map(_.bytes).sum, refs.map(_.rows).sum,
+      refs.map(_.bytes).sum, refs.map(_.rows).sum, HeldMask.dvProbe,
       spark.read.schema(TableStore.DvSchema).parquet(refs.map(_.path): _*))
 
-  /** The probe side of a mask join ([[eqProbe]], [[dvProbe]]) over
-    * the delete set `dels` reads. Delete files are write-once, and
-    * `DvV1Scan.buildScan` materializes the mask at PLAN time: read from
-    * the files, every catalog query over a masked snapshot pays a Spark
-    * job (plus the equality side's shuffle) for the same rows. A set
-    * under [[dvBroadcastThreshold]] is therefore held on the driver
-    * ([[heldRows]], the shared small-row-set memo) and broadcast from a
-    * local relation of those rows — the same rows the broadcast pulls to
-    * the driver on every query anyway. Above the byte gate the shuffled
-    * join is unchanged. `key` names the delete set (mask kind, key
-    * columns, read schema, sorted files with each equality ref's
-    * `since`). Every mask built from the files rather than the memo
-    * counts in [[TableStore.maskLoads]]. */
-  private def maskProbe(key: String, bytes: Long, rows: Long,
-      dels: => DataFrame): DataFrame = {
+  /** A mask over the delete set `dels` reads ([[eqProbe]], [[dvProbe]]).
+    * Delete files are write-once, and `DvV1Scan.buildScan` plans the
+    * masked read at PLAN time: a mask read from the files, or a broadcast
+    * anti-join over held rows, runs a Spark job on every plan of every
+    * query over a masked snapshot. A set under [[dvBroadcastThreshold]]
+    * is therefore held on the driver ([[heldRows]], the shared
+    * small-row-set memo) and turned once into the in-scan `probe` its
+    * memo entry keeps (Left; [[HeldMask]]): the read applies it as a
+    * per-row predicate and planning runs no job. Otherwise (Right) the
+    * caller anti-joins the rows read from the files: broadcast-hinted
+    * under the byte gate, plain above it. `key` names the delete set
+    * (mask kind, key columns, read schema, sorted files with each
+    * equality ref's `since`). Every mask built from the files rather than
+    * the memo counts in [[TableStore.maskLoads]]. */
+  private def maskProbe[P](key: String, bytes: Long, rows: Long,
+      probe: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => P,
+      dels: => DataFrame)
+      : Either[org.apache.spark.broadcast.Broadcast[P], DataFrame] = {
     import org.apache.spark.sql.functions.broadcast
     if (bytes > dvBroadcastThreshold) {
       TableStore.maskLoads.incrementAndGet()
-      return dels
+      return Right(dels)
     }
     heldRows("mask", key, rows) {
       TableStore.maskLoads.incrementAndGet()
       dels
     } match {
-      // fresh attribute ids per use: one query may mask the same set twice
-      case Some(rel) => broadcast(org.apache.spark.sql.graftbridge
-        .DatasetBridge.ofRows(spark, rel.newInstance()))
+      case Some(held) => Left(held.probe(spark.sparkContext)(probe))
       case None =>
         TableStore.maskLoads.incrementAndGet()
-        broadcast(dels)
+        Right(broadcast(dels))
     }
   }
 
@@ -839,13 +884,12 @@ class TableStore(val spark: SparkSession, val root: String,
     * `spark.graft.meta.manifestCache=false`. A miss loads outside the map
     * (get, then put): a Spark job never runs inside a map operation. */
   private def heldRows(kind: String, key: String, rows: Long)(
-      load: => DataFrame)
-      : Option[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] = {
+      load: => DataFrame): Option[TableStore.Held] = {
     if (rows > TableStore.MaskMemoMaxRows ||
         !spark.conf.getOption("spark.graft.meta.manifestCache")
           .forall(_.toBoolean)) return None
     val mKey = (epochMemoKey, kind, key)
-    Option(TableStore.rowMemo.get(mKey)).orElse {
+    TableStore.rowMemoGet(mKey).orElse {
       val d = load
       val ext = org.apache.spark.sql.catalyst.plans.logical.LocalRelation
         .fromExternalRows(org.apache.spark.sql.catalyst.types.DataTypeUtils
@@ -853,9 +897,8 @@ class TableStore(val spark: SparkSession, val root: String,
       // held as unsafe rows, more compact than the boxed external rows
       val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
         .create(ext.output, ext.output)
-      val l = ext.copy(data = ext.data.map(proj(_).copy()))
-      TableStore.rowMemoPut(mKey, l)
-      Some(l)
+      Some(TableStore.rowMemoPut(mKey,
+        ext.copy(data = ext.data.map(proj(_).copy()))))
     }
   }
 
@@ -871,27 +914,8 @@ class TableStore(val spark: SparkSession, val root: String,
     val counted = m.isSharded || m.inlineFiles.forall(m.inlineStats.contains)
     if (!counted || m.totalBytes > TableStore.BroadcastBytes) None
     else heldRows("view", version.toString, m.totalRows)(
-      readSnapshot(version))
+      readSnapshot(version)).map(_.rel)
   }
-
-  /** Effective-rows filter for delete-vector snapshots: drop every
-    * `(file, pos)` the DV set names, via an anti-join on the parquet
-    * metadata columns. Positions are file-absolute (parquet row index), so
-    * the match is exact under splits, row-group skipping, and any task
-    * layout. Small DV sets (the MOR contract steady state — accumulating
-    * deletes get folded into data by [[purgeDeletes]] / [[compact]]) are
-    * broadcast-hinted so the anti-join is map-side and the corpus never
-    * shuffles; past [[dvBroadcastThreshold]] the hint is dropped and Spark
-    * plans a shuffled anti-join instead of OOMing the driver. `df` must
-    * carry `_g_file`/`_g_pos` (see [[tagPos]]). */
-  private def dvFilter(tagged: DataFrame, m: Manifest): DataFrame =
-    if (!m.hasDvs) tagged
-    else {
-      val probe = dvProbe(m.dvRefs)
-      tagged.join(probe,
-        tagged("_g_file") === probe("file_path") && tagged("_g_pos") === probe("pos"),
-        "left_anti")
-    }
 
   /** Re-point inherited DV refs through a commit that DROPS data files
     * while keeping the DVs (COW commits over a DV'd snapshot): entries
@@ -1194,30 +1218,38 @@ class TableStore(val spark: SparkSession, val root: String,
       return None // mixed key shapes: one semi-join cannot dedupe overlaps
     if (newEq.nonEmpty && (colSets.head.isEmpty ||
         !colSets.head.forall(f => fm.schema.fieldNames.contains(f) &&
-          tm.schema.fieldNames.contains(f)))) return None
+          tm.schema.fieldNames.contains(f) &&
+          fm.schema(f).dataType == tm.schema(f).dataType))) return None
     val addedSet = added.toSet
     val removedSet = removed.toSet
     val candidates = added.filter(removedSet) // mask-changed, on both sides
     val added0 = added.filterNot(removedSet)
     val removed0 = removed.filterNot(addedSet)
     val tagged = readFilesWithPos(fm, candidates)
+    // the read-side masks' own probes over the new deletes only: held,
+    // the rows they drop; read from the files, a semi-join
     val newlyMasked =
       if (newEq.nonEmpty) {
-        // new delete keys collapsed to max(since) per key — the read-side
-        // eqFilter's own probe
+        // new delete keys collapsed to max(since) per key
         val cols = colSets.head
-        val probe = eqProbe(tm, cols, newEq)
-        val withV = tagged.withColumn("_g_snapv",
-          regexp_extract(col("_g_file"), "/snap-(\\d+)-", 1).cast("long"))
-        val cond = cols.map(k => withV(k) === probe(k)).reduce(_ && _) &&
-          withV("_g_snapv") < probe("_eq_since")
-        withV.join(probe, cond, "left_semi").drop("_g_snapv")
+        eqProbe(tm, cols, newEq) match {
+          case Left(probe) =>
+            tagged.filter(!heldKeep(None, Seq(cols -> probe), None))
+          case Right(probe) =>
+            val withV = tagged.withColumn("_g_snapv",
+              fileVersionCol(col("_g_file"), None))
+            val cond = cols.map(k => withV(k) === probe(k)).reduce(_ && _) &&
+              withV("_g_snapv") < probe("_eq_since")
+            withV.join(probe, cond, "left_semi").drop("_g_snapv")
+        }
       } else {
         // new DV entries are exact (file, pos) row addresses
-        val probe = dvProbe(newDv)
-        tagged.join(probe,
-          tagged("_g_file") === probe("file_path") &&
-            tagged("_g_pos") === probe("pos"), "left_semi")
+        dvProbe(newDv) match {
+          case Left(probe) => tagged.filter(!heldKeep(Some(probe), Nil, None))
+          case Right(probe) => tagged.join(probe,
+            tagged("_g_file") === probe("file_path") &&
+              tagged("_g_pos") === probe("pos"), "left_semi")
+        }
       }
     val preRaw = newlyMasked.drop("_g_file", "_g_pos")
       .select(fm.schema.fieldNames.map(col): _*)
@@ -4936,33 +4968,101 @@ object TableStore {
 
   /** Process-wide memo of small immutable row sets held on the driver
     * ([[TableStore#heldRows]]): (epochMemoKey, kind, key) → the rows as a
-    * local relation. Two kinds share it: `mask` (delete masks,
+    * local relation ([[Held]]). Two kinds share it: `mask` (delete masks,
+    * each with the in-scan probe built from its rows,
     * [[TableStore#maskProbe]]) and `view` (view snapshots the view
     * rewrites serve and fold, [[TableStore#heldSnapshot]]). Sets above
-    * [[MaskMemoMaxRows]] rows never enter; the memo is cleared wholesale
-    * past 64 entries or [[MaskMemoMaxRows]] held rows, and invalidated
-    * with the manifest memo. */
+    * [[MaskMemoMaxRows]] rows never enter; a put past [[RowMemoMaxEntries]]
+    * entries or [[MaskMemoMaxRows]] held rows evicts the least recently
+    * used entries until it fits, a `view` put drops the older held
+    * versions of its view, and the memo is invalidated with the manifest
+    * memo. */
   private[graft] val rowMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String),
-    org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    (String, String, String), Held]
 
   /** Row budget of [[rowMemo]], per entry and in total. */
   private[graft] val MaskMemoMaxRows = 250000L
 
+  /** Entry cap of [[rowMemo]]. */
+  private val RowMemoMaxEntries = 64
+
+  /** Recency clock of [[rowMemo]] entries. */
+  private val rowMemoClock = new java.util.concurrent.atomic.AtomicLong
+
+  /** One [[rowMemo]] entry: the held rows, their unsafe-row bytes, the
+    * recency stamp eviction orders by, and the in-scan probe built from
+    * the rows on first use ([[HeldMask]]). The probe is a Spark broadcast
+    * released with the entry and never destroyed: a plan in flight may
+    * still hold it, and Spark's ContextCleaner frees it once nothing
+    * does. */
+  private[graft] final class Held(
+      val rel: org.apache.spark.sql.catalyst.plans.logical.LocalRelation) {
+    val bytes: Long = rel.data.iterator.map {
+      case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow =>
+        u.getSizeInBytes.toLong
+      case _ => 0L
+    }.sum
+    @volatile private[TableStore] var used: Long =
+      rowMemoClock.incrementAndGet()
+    private var built: (org.apache.spark.SparkContext,
+      org.apache.spark.broadcast.Broadcast[Any]) = _
+
+    /** The probe `build` makes of the rows, broadcast once per context. */
+    def probe[P](sc: org.apache.spark.SparkContext)(
+        build: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => P)
+        : org.apache.spark.broadcast.Broadcast[P] = synchronized {
+      if (built == null || (built._1 ne sc))
+        built = (sc, sc.broadcast[Any](build(rel)))
+      built._2.asInstanceOf[org.apache.spark.broadcast.Broadcast[P]]
+    }
+  }
+
   /** Rows [[rowMemo]] holds. */
   private[graft] def rowMemoRows: Long = {
     import scala.jdk.CollectionConverters._
-    rowMemo.values.asScala.map(_.data.size.toLong).sum
+    rowMemo.values.asScala.map(_.rel.data.size.toLong).sum
   }
 
+  /** Entries, rows and held unsafe-row bytes of one [[rowMemo]] kind. */
+  private[graft] final case class MemoStats(entries: Int, rows: Long,
+      bytes: Long)
+
+  /** [[rowMemo]] by kind (`mask`, `view`). */
+  private[graft] def rowMemoStats: Map[String, MemoStats] = {
+    import scala.jdk.CollectionConverters._
+    rowMemo.asScala.toSeq.groupBy(_._1._2).map { case (kind, es) =>
+      kind -> MemoStats(es.size, es.map(_._2.rel.data.size.toLong).sum,
+        es.map(_._2.bytes).sum)
+    }
+  }
+
+  /** The held entry under `k`, stamped as used. */
+  private[graft] def rowMemoGet(k: (String, String, String)): Option[Held] =
+    Option(rowMemo.get(k)).map { h =>
+      h.used = rowMemoClock.incrementAndGet(); h
+    }
+
+  /** Hold `rel` under `k` (unless it alone exceeds the row budget) and
+    * return its entry. */
   private[graft] def rowMemoPut(k: (String, String, String),
       rel: org.apache.spark.sql.catalyst.plans.logical.LocalRelation)
-      : Unit = rowMemo.synchronized {
+      : Held = rowMemo.synchronized {
+    import scala.jdk.CollectionConverters._
+    val held = new Held(rel)
     val n = rel.data.size.toLong
-    if (rowMemo.size > 64 || rowMemoRows + n > MaskMemoMaxRows)
-      rowMemo.clear()
-    if (n <= MaskMemoMaxRows) rowMemo.put(k, rel)
-    ()
+    if (n <= MaskMemoMaxRows) {
+      rowMemo.remove(k)
+      if (k._2 == "view") {
+        val v = k._3.toLongOption
+        rowMemo.keySet.removeIf(o => o._1 == k._1 && o._2 == "view" &&
+          o._3.toLongOption.exists(ov => v.exists(ov < _)))
+      }
+      while (!rowMemo.isEmpty && (rowMemo.size >= RowMemoMaxEntries ||
+          rowMemoRows + n > MaskMemoMaxRows))
+        rowMemo.remove(rowMemo.asScala.minBy(_._2.used)._1)
+      rowMemo.put(k, held)
+    }
+    held
   }
 
   /** Drop every process-wide metadata memo entry under `memoKeyPrefix` —

@@ -259,40 +259,6 @@ class HeldViewSpec extends SparkSuite {
     }
   }
 
-  /** Job ids started while `body` runs, fenced by two marker jobs: the
-    * listener bus delivers in order, so once the closing marker's start
-    * is seen every job of `body` has been counted. */
-  private def jobsDuring(body: => Unit): Int = {
-    val seen = new java.util.concurrent.LinkedBlockingQueue[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("-"))
-    }
-    def marker(name: String): Unit = {
-      spark.sparkContext.setJobDescription(name)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-    }
-    def awaitMarker(name: String): Seq[String] = {
-      val got = scala.collection.mutable.ArrayBuffer.empty[String]
-      var e = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
-      while (e != null && e != name) {
-        got += e; e = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
-      }
-      assert(e == name, s"marker job $name never reached the listener")
-      got.toSeq
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      marker("held-open"); awaitMarker("held-open")
-      body
-      marker("held-close"); awaitMarker("held-close").size
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("zero-job pin: on a memo hit an agg-view and a join-view query " +
       "collect with no Spark job; with the manifest cache off they read " +
       "the view files and answer the same") {
