@@ -2,41 +2,49 @@ package graft.catalog
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, BindReferences, Expression, GenericInternalRow, InterpretedMutableProjection, InterpretedProjection, InterpretedUnsafeProjection, JoinedRow, NamedExpression, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, BindReferences, Expression, GenericInternalRow, IntegerLiteral, InterpretedMutableProjection, InterpretedOrdering, InterpretedProjection, InterpretedUnsafeProjection, JoinedRow, NamedExpression, Predicate, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
 import org.apache.spark.sql.catalyst.planning.PhysicalAggregation
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, GlobalLimit, LocalLimit, LocalRelation, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.graftbridge.{AggregateBridge, DatasetBridge}
 
 import graft.store.TableStore
 
-/** Small view snapshots served from rows held on the driver.
+/** Small view and ANN index snapshots served from rows held on the
+  * driver.
   *
   * A view rewrite that answers from a view's stored snapshot reads it
-  * through [[read]]: when the snapshot passes the gate of
-  * [[TableStore#heldSnapshot]] (the shared small-row-set memo,
+  * through [[read]], an ANN top-k search ([[graft.store.AnnIndex.topk]])
+  * its index snapshot through [[relation]]: when the snapshot passes the
+  * gate of [[TableStore#heldSnapshot]] (the shared small-row-set memo,
   * [[TableStore.rowMemo]]), its rows come from the driver as a
-  * `LocalRelation` tagged with the view store's root. [[fold]] then
-  * evaluates the rewritten Filter/Project (Spark's own
-  * `ConvertToLocalRelation`) and Aggregate nodes over those rows at plan
-  * time, so the query plans to one `LocalRelation` and `collect()` runs no
-  * Spark job. Only relations carrying [[RootTag]] fold — a user's VALUES
-  * list never does — and the tag rides every folded result, so
-  * [[AggViewRewrite.served]] still names the view that answered. */
-private[catalog] object HeldViews {
+  * `LocalRelation` tagged with the store's root. [[fold]] then evaluates
+  * the Project, Filter, Aggregate, Sort and Limit nodes over those rows at
+  * plan time, so the query plans to one `LocalRelation` and `collect()`
+  * runs no Spark job. Only relations carrying [[RootTag]] fold
+  * — a user's VALUES list never does — and the tag rides every folded
+  * result, so [[AggViewRewrite.served]] still names the view or index that
+  * answered. */
+private[graft] object HeldViews {
 
-  /** The view store root a held (or folded) relation answers from. */
+  /** The view or index store root a held (or folded) relation answers
+    * from. */
   val RootTag = new TreeNodeTag[String]("graftHeldView")
 
   /** Snapshot `version` of view store `st` as a DataFrame over held rows
     * (fresh attribute ids per use: one plan may read a view twice), or
     * None when the snapshot is not held. */
   def read(st: TableStore, version: Long): Option[DataFrame] =
-    st.heldSnapshot(version).map { rel =>
-      DatasetBridge.ofRows(st.spark, tagged(rel.newInstance(), st.root))
-    }
+    relation(st, version, "view").map(DatasetBridge.ofRows(st.spark, _))
+
+  /** Snapshot `version` of store `st` as a tagged relation over held rows
+    * of memo kind `kind`, for a caller that builds its plan over it. */
+  def relation(st: TableStore, version: Long,
+      kind: String): Option[LocalRelation] =
+    st.heldSnapshot(version, kind).map(rel =>
+      tagged(rel.newInstance(), st.root))
 
   private def tagged(l: LocalRelation, root: String): LocalRelation = {
     l.setTagValue(RootTag, root)
@@ -44,23 +52,75 @@ private[catalog] object HeldViews {
   }
 
   /** `p` folded into one tagged `LocalRelation`, if every node of it is a
-    * Project, Filter or Aggregate over a held relation; None otherwise
-    * (the caller keeps its Spark plan). An expression that fails while
-    * folding (an ANSI overflow, say) throws here exactly as the Spark
-    * plan would at execution; a rule's decline leaves that plan to raise
-    * it. */
+    * Project, Filter, Aggregate, Sort or Limit over a held relation; None
+    * otherwise (the caller keeps its Spark plan). Every node evaluates
+    * interpreted, as Spark's `ConvertToLocalRelation` evaluates a Project
+    * (a generated Filter class would be compiled anew for each distinct
+    * literal, which costs more than filtering a held set): a Filter with
+    * Spark's interpreted predicate, a Sort with its interpreted ordering
+    * over the same `SortOrder`s, stably, and a sorted LIMIT as a bounded
+    * top-n; a Limit keeps the first rows. An expression that fails while
+    * folding (an ANSI overflow, say) throws here exactly as the Spark plan
+    * would at execution; a rule's decline leaves that plan to raise it. */
   def fold(p: LogicalPlan): Option[LocalRelation] = p match {
     case l: LocalRelation => l.getTagValue(RootTag).map(_ => l)
-    case _: Project | _: Filter => fold(p.children.head).flatMap { in =>
+    case _: Project => fold(p.children.head).flatMap { in =>
       ConvertToLocalRelation(p.withNewChildren(Seq(in))) match {
         case out: LocalRelation => Some(tagged(out, rootOf(in)))
         case _ => None // an unevaluable expression
       }
     }
+    case f: Filter
+        if !ConvertToLocalRelation.hasUnevaluableExpr(f.condition) =>
+      fold(f.child).map { in =>
+        val keep = Predicate.createInterpreted(
+          BindReferences.bindReference(f.condition, in.output))
+        keep.initialize(0)
+        tagged(in.copy(data = in.data.filter(keep.eval)), rootOf(in))
+      }
     case a: Aggregate => fold(a.child).flatMap(in =>
       aggregate(a, in).map(tagged(_, rootOf(in))))
+    case s: Sort if sortable(s) => ordered(s, Int.MaxValue)
+    case GlobalLimit(IntegerLiteral(n), LocalLimit(IntegerLiteral(m), s: Sort))
+        if n <= m && sortable(s) => ordered(s, n)
+    case GlobalLimit(IntegerLiteral(n), c) => limit(n, c)
+    case LocalLimit(IntegerLiteral(n), c) => limit(n, c)
     case _ => None
   }
+
+  private def limit(n: Int, child: LogicalPlan): Option[LocalRelation] =
+    fold(child).map(in => tagged(in.copy(data = in.data.take(n)), rootOf(in)))
+
+  private def sortable(s: Sort): Boolean = s.order.forall(o =>
+    o.deterministic && !ConvertToLocalRelation.hasUnevaluableExpr(o.child))
+
+  /** The first `n` rows of `s` folded: a stable sort when `n` covers the
+    * input, else one pass through a bounded heap of `n` rows (a sorted
+    * LIMIT keeps `n` rows, not the whole input, as Spark's TakeOrdered
+    * does), ties kept in input order. */
+  private def ordered(s: Sort, n: Int): Option[LocalRelation] =
+    fold(s.child).map { in =>
+      val ord = new InterpretedOrdering(s.order, in.output)
+      val rows =
+        if (n >= in.data.size) in.data.sorted(ord)
+        else if (n <= 0) Nil
+        else {
+          val byPos = new Ordering[(InternalRow, Int)] {
+            def compare(a: (InternalRow, Int), b: (InternalRow, Int)): Int = {
+              val c = ord.compare(a._1, b._1)
+              if (c != 0) c else Integer.compare(a._2, b._2)
+            }
+          }
+          // a max-heap of the n least rows seen so far
+          val heap = scala.collection.mutable.PriorityQueue.empty(byPos)
+          in.data.iterator.zipWithIndex.foreach { r =>
+            if (heap.size < n) heap.enqueue(r)
+            else if (byPos.lt(r, heap.head)) { heap.dequeue(); heap.enqueue(r) }
+          }
+          heap.toSeq.sorted(byPos).map(_._1)
+        }
+      tagged(in.copy(data = rows), rootOf(in))
+    }
 
   private def rootOf(l: LocalRelation): String = l.getTagValue(RootTag).get
 

@@ -55,7 +55,13 @@ import graft.store.{AnnIndex, TableStore}
   * to the brute-force scan (the index stores original vectors and scores
   * through the same kernel), so the rewrite is EXACT unless the user
   * explicitly trades recall for speed by lowering nProbe. Kill switch:
-  * `spark.graft.ann.rewrite=false`. */
+  * `spark.graft.ann.rewrite=false`.
+  *
+  * Over an index held on the driver ([[graft.store.AnnIndex.topk]]) the
+  * search runs while this rule rewrites, at optimization: the splice is
+  * the folded answer, so `explain()`, or a plan that never executes,
+  * pays for the search (and, on a memo miss, the Spark job that reads
+  * the index version into the memo). */
 class VectorTopKRewriteRule
     extends ServeRule("spark.graft.ann.rewrite", "vector top-k rewrite") {
 
@@ -436,17 +442,21 @@ class VectorTopKRewriteRule
         case _ => return None
       }
     }
-    val repPlan = rep.select(aligned: _*).queryExecution.optimizedPlan
+    // a search over held index rows splices the analyzed plan, for the
+    // splice to fold it: Spark's nested optimizer would fold the Project
+    // into an untagged relation
+    val aln = rep.select(aligned: _*).queryExecution
+    val repPlan =
+      if (rep.queryExecution.analyzed.getTagValue(HeldViews.RootTag).isDefined)
+        aln.analyzed
+      else aln.optimizedPlan
     if (repPlan.output.size != child.output.size ||
       repPlan.output.zip(child.output).exists {
         case (n, o) => n.dataType != o.dataType
       }) return None
     logInfo(s"rewrote vector top-$k over ${store.root} to ANN index '$name'" +
       s" (nProbe=${if (nProbe <= 0) "all" else nProbe.toString})")
-    Some(Project(child.output.zip(repPlan.output).map { case (o, n) =>
-      Alias(n, o.name)(exprId = o.exprId, qualifier = o.qualifier,
-        explicitMetadata = Some(o.metadata))
-    }, repPlan))
+    Some(HeldViews.splice(child.output, repPlan))
   }
 }
 

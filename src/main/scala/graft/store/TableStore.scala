@@ -877,7 +877,8 @@ class TableStore(val spark: SparkSession, val root: String,
 
   /** A small immutable row set of this store, held on the driver: the
     * rows `load` reads, memoized process-wide in [[TableStore.rowMemo]]
-    * under (epochMemoKey, `kind`, `key`). `key` must name rows that never
+    * under (epochMemoKey, `kind`, `key`), `kind` one of `mask`, `view` and
+    * `index` ([[TableStore.rowMemo]]). `key` must name rows that never
     * change (write-once delete files, a committed snapshot version). None
     * — the caller reads the files itself — when `rows` (a metadata count,
     * checked before any read) exceeds [[TableStore.MaskMemoMaxRows]] or
@@ -902,18 +903,20 @@ class TableStore(val spark: SparkSession, val root: String,
     }
   }
 
-  /** Snapshot `version` as rows held on the driver ([[heldRows]], kind
-    * `view`) — the view rewrites serve a small view snapshot from these
-    * and fold the query over them at plan time. Gated before any read on
-    * the manifest's totals: at most [[TableStore.MaskMemoMaxRows]] rows
-    * and [[TableStore.BroadcastBytes]] bytes, with stats on every file.
-    * None past the gate or with the memo off. */
-  private[graft] def heldSnapshot(version: Long)
+  /** Snapshot `version` as rows held on the driver ([[heldRows]], under
+    * `kind`: `view` for view snapshots, which the view rewrites serve and
+    * fold at plan time, `index` for ANN index snapshots, which
+    * [[AnnIndex.topk]] probes, scores and ranks at plan time). Gated
+    * before any read on the manifest's totals: at most
+    * [[TableStore.MaskMemoMaxRows]] rows and [[TableStore.BroadcastBytes]]
+    * bytes, with stats on every file. None past the gate or with the memo
+    * off. */
+  private[graft] def heldSnapshot(version: Long, kind: String)
       : Option[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] = {
     val m = manifest(version)
     val counted = m.isSharded || m.inlineFiles.forall(m.inlineStats.contains)
     if (!counted || m.totalBytes > TableStore.BroadcastBytes) None
-    else heldRows("view", version.toString, m.totalRows)(
+    else heldRows(kind, version.toString, m.totalRows)(
       readSnapshot(version)).map(_.rel)
   }
 
@@ -4968,15 +4971,16 @@ object TableStore {
 
   /** Process-wide memo of small immutable row sets held on the driver
     * ([[TableStore#heldRows]]): (epochMemoKey, kind, key) → the rows as a
-    * local relation ([[Held]]). Two kinds share it: `mask` (delete masks,
-    * each with the in-scan probe built from its rows,
-    * [[TableStore#maskProbe]]) and `view` (view snapshots the view
-    * rewrites serve and fold, [[TableStore#heldSnapshot]]). Sets above
-    * [[MaskMemoMaxRows]] rows never enter; a put past [[RowMemoMaxEntries]]
-    * entries or [[MaskMemoMaxRows]] held rows evicts the least recently
-    * used entries until it fits, a `view` put drops the older held
-    * versions of its view, and the memo is invalidated with the manifest
-    * memo. */
+    * local relation ([[Held]]). Three kinds share it: `mask` (delete
+    * masks, each with the in-scan probe built from its rows,
+    * [[TableStore#maskProbe]]), `view` (view snapshots the view rewrites
+    * serve and fold) and `index` (ANN index snapshots [[AnnIndex.topk]]
+    * searches), the last two keyed by version
+    * ([[TableStore#heldSnapshot]]). Sets above [[MaskMemoMaxRows]] rows
+    * never enter; a put past [[RowMemoMaxEntries]] entries or
+    * [[MaskMemoMaxRows]] held rows evicts the least recently used entries
+    * until it fits, a `view` or `index` put drops the older held versions
+    * of its store, and the memo is invalidated with the manifest memo. */
   private[graft] val rowMemo = new java.util.concurrent.ConcurrentHashMap[
     (String, String, String), Held]
 
@@ -5027,7 +5031,7 @@ object TableStore {
   private[graft] final case class MemoStats(entries: Int, rows: Long,
       bytes: Long)
 
-  /** [[rowMemo]] by kind (`mask`, `view`). */
+  /** [[rowMemo]] by kind (`mask`, `view`, `index`). */
   private[graft] def rowMemoStats: Map[String, MemoStats] = {
     import scala.jdk.CollectionConverters._
     rowMemo.asScala.toSeq.groupBy(_._1._2).map { case (kind, es) =>
@@ -5052,9 +5056,9 @@ object TableStore {
     val n = rel.data.size.toLong
     if (n <= MaskMemoMaxRows) {
       rowMemo.remove(k)
-      if (k._2 == "view") {
+      if (k._2 != "mask") {
         val v = k._3.toLongOption
-        rowMemo.keySet.removeIf(o => o._1 == k._1 && o._2 == "view" &&
+        rowMemo.keySet.removeIf(o => o._1 == k._1 && o._2 == k._2 &&
           o._3.toLongOption.exists(ov => v.exists(ov < _)))
       }
       while (!rowMemo.isEmpty && (rowMemo.size >= RowMemoMaxEntries ||
@@ -5066,11 +5070,11 @@ object TableStore {
   }
 
   /** Drop every process-wide metadata memo entry under `memoKeyPrefix` —
-    * the manifest cache, the span memos, the held row sets (delete masks
-    * and view snapshots), and the derivative-registry snapshots. Called by
-    * every path that DELETES or RENUMBERS committed metadata, where a later
-    * re-creation could reuse a (store, version) key with different
-    * content: DROP/RENAME TABLE (the
+    * the manifest cache, the span memos, the held row sets (delete masks,
+    * view and index snapshots), and the derivative-registry snapshots.
+    * Called by every path that DELETES or RENUMBERS committed metadata,
+    * where a later re-creation could reuse a (store, version) key with
+    * different content: DROP/RENAME TABLE (the
     * bench/test reality of drop-and-recreate at one root),
     * MaterializedJoin/Agg/SecondaryIndex drops, dropBranch (+ recreate
     * restarts branch numbering), rebase and

@@ -2,7 +2,7 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
 
 /** Bridge to Spark's `private[sql]` Column ⇄ Expression converters, needed to
   * expose custom Catalyst expressions through the public Column API in
@@ -11,4 +11,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  /** `c` as the Catalyst expression a Dataset operator would put in its
+    * plan (unresolved until analysis), for a plan built node by node. */
+  def catalyst(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
 }

@@ -32,6 +32,11 @@ class AnnIndexSpec extends SparkSuite {
       (10000000L + j, qv.map(x => x * math.pow(2.0, j.toDouble).toFloat))
     }.toDF("vec_id", "embedding")
 
+  private def memoOff[T](body: => T): T = {
+    spark.conf.set("spark.graft.meta.manifestCache", "false")
+    try body finally spark.conf.unset("spark.graft.meta.manifestCache")
+  }
+
   private def freshStore() = new TableStore(spark,
     Files.createTempDirectory("graft_ann").toString)
 
@@ -45,18 +50,32 @@ class AnnIndexSpec extends SparkSuite {
       Seq("vec_id"), 8)
     AnnIndex.create(store, "ann", "embedding", clusters = 8, iters = 3,
       numBuckets = 8)
-    val top = AnnIndex.topk(store, "ann", qv, k = 6, nProbe = 2,
+    def search() = AnnIndex.topk(store, "ann", qv, k = 6, nProbe = 2,
       excludeId = Some(999L))
-    val idxFiles = top.inputFiles.toSet
-    val allIdx = SecondaryIndex.indexStore(store, "ann")
-      .readSnapshot().inputFiles.toSet
-    assert(idxFiles.nonEmpty && idxFiles.subsetOf(allIdx) &&
-      idxFiles.size < allIdx.size,
-      s"point query must read a strict subset of index files: " +
-        s"${idxFiles.size} of ${allIdx.size}")
-    assert(!top.inputFiles.exists(_.contains(s"${store.root}/data")),
-      "point query must never touch the base table")
-    val rows = top.collect().map(r => (r.getLong(0), r.getDouble(1)))
+    // an index past the held gate (here: the memo off) is read bucket by
+    // bucket
+    val fileRows = memoOff {
+      val top = search()
+      val idxFiles = top.inputFiles.toSet
+      val allIdx = SecondaryIndex.indexStore(store, "ann")
+        .readSnapshot().inputFiles.toSet
+      assert(idxFiles.nonEmpty && idxFiles.subsetOf(allIdx) &&
+        idxFiles.size < allIdx.size,
+        s"point query must read a strict subset of index files: " +
+          s"${idxFiles.size} of ${allIdx.size}")
+      assert(!top.inputFiles.exists(_.contains(s"${store.root}/data")),
+        "point query must never touch the base table")
+      top.collect().toSeq
+    }
+    // a held index answers the same from the driver: no job, no file
+    search().collect() // holds the index rows
+    var top: org.apache.spark.sql.DataFrame = null
+    var heldRows = Seq.empty[org.apache.spark.sql.Row]
+    val jobs = jobsDuring { top = search(); heldRows = top.collect().toSeq }
+    assert(jobs == 0 && top.inputFiles.isEmpty,
+      s"a held search ran $jobs jobs over ${top.inputFiles.toSeq}")
+    assert(heldRows == fileRows)
+    val rows = heldRows.map(r => (r.getLong(0), r.getDouble(1)))
     val planted = rows.filter(_._1 >= 10000000L)
     assert(planted.map(_._1).toSeq == (1L to 5L).map(10000000L + _),
       s"planted set missing from top-k: ${rows.toSeq}")

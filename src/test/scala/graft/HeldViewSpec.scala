@@ -223,6 +223,54 @@ class HeldViewSpec extends SparkSuite {
       s"$rAll\n${rOn.queryExecution.optimizedPlan}")
   }
 
+  test("an aggregate over an ordered LIMIT of the held join splice folds " +
+      "the Sort and Limit and answers as the rewrite off") {
+    fixture; plainViews()
+    val inner = "SELECT f.id, f.amt, d.seg FROM hv_cat.analytics.jf f " +
+      "JOIN hv_cat.analytics.jd d ON f.fk = d.k"
+    val sqls = Seq(
+      s"SELECT seg, count(*) AS n, sum(amt) AS s FROM ($inner " +
+        "ORDER BY f.amt DESC NULLS LAST, f.id LIMIT 40) GROUP BY seg",
+      s"SELECT count(*) AS n, max(id) AS m FROM ($inner " +
+        "ORDER BY d.seg NULLS FIRST, f.id DESC LIMIT 25)")
+    sqls.foreach { sql =>
+      val (on, all) = threeWays(sql)
+      assert(all.distinct.size == 1 && all.head.isRight && folded(on),
+        s"$sql\n$all\n${on.queryExecution.optimizedPlan}")
+    }
+  }
+
+  test("a sorted LIMIT folds to the first n rows of a stable sort, ties " +
+      "in input order, at every n") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{Ascending,
+      AttributeReference, Descending, Literal, SortOrder}
+    import org.apache.spark.sql.catalyst.plans.logical.{Limit, Sort}
+    val k = AttributeReference("k", IntegerType)()
+    val pos = AttributeReference("pos", IntegerType)()
+    val rnd = new java.util.SplittableRandom(77L)
+    val rows = (0 until 300).map(i =>
+      InternalRow(if (i % 11 == 0) null else Int.box(rnd.nextInt(12)), i))
+    val rel = LocalRelation(Seq(k, pos), rows)
+    rel.setTagValue(graft.catalog.HeldViews.RootTag, "held")
+    def keyOf(r: InternalRow): Option[Int] =
+      if (r.isNullAt(0)) None else Some(r.getInt(0))
+    Seq(Ascending, Descending).foreach { dir =>
+      // Spark's defaults: NULLS FIRST ascending, NULLS LAST descending
+      val byKey = Ordering.Option(Ordering.Int)
+      val sorted = rows.sortBy(keyOf)(if (dir == Ascending) byKey
+        else byKey.reverse)
+      Seq(0, 1, 7, 40, 299, 300, 450).foreach { n =>
+        val plan =
+          Limit(Literal(n), Sort(Seq(SortOrder(k, dir)), global = true, rel))
+        val got = graft.catalog.HeldViews.fold(plan).map(_.data.map(r =>
+          r.getInt(1)))
+        assert(got.contains(sorted.take(n).map(_.getInt(1))),
+          s"$dir LIMIT $n: $got")
+      }
+    }
+  }
+
   test("an overflowing decimal SUM raises the same error with and without " +
       "the fold") {
     val big = new java.math.BigDecimal("6E+37").setScale(0)

@@ -31,6 +31,22 @@ class VectorRewriteSpec extends SparkSuite {
     (id, v)
   }.toDF("vec_id", "embedding")
 
+  private def memoOff[T](body: => T): T = {
+    spark.conf.set("spark.graft.meta.manifestCache", "false")
+    try body finally spark.conf.unset("spark.graft.meta.manifestCache")
+  }
+
+  /** `q` served from the held index rows: `want`, with no Spark job and no
+    * file read (base or index). */
+  private def assertHeld(q: String, want: Seq[org.apache.spark.sql.Row])
+      : Unit = {
+    var df: org.apache.spark.sql.DataFrame = null
+    var got = Seq.empty[org.apache.spark.sql.Row]
+    val jobs = jobsDuring { df = spark.sql(q); got = df.collect().toSeq }
+    assert(jobs == 0 && df.inputFiles.isEmpty && got == want,
+      s"$jobs jobs, files ${df.inputFiles.toSeq} serving a held index:\n$q")
+  }
+
   private def arrLit(v: Array[Float]): String =
     v.map(f => s"CAST($f AS FLOAT)").mkString("ARRAY(", ",", ")")
 
@@ -181,21 +197,39 @@ class VectorRewriteSpec extends SparkSuite {
     val qv = new Array[Float](dim); qv(1) = 1f
     spark.conf.set("spark.graft.ann.sql.nProbe", "2")
     try {
-      val df = spark.sql(topkSql("vr_cat.analytics.vecs2", arrLit(qv)))
+      val q = topkSql("vr_cat.analytics.vecs2", arrLit(qv))
+      val df = spark.sql(q)
       assert(VectorTopKRewrite.served(df))
-      assert(df.collect().length == 5)
+      val heldRows = df.collect().toSeq
+      assert(heldRows.length == 5)
       val allIdx = graft.store.SecondaryIndex.indexStore(store, "ann")
         .readSnapshot().inputFiles.toSet
-      assert(df.inputFiles.toSet.size < allIdx.size,
-        "nProbe=2 of 8 cells must read a strict subset of index buckets")
+      // an index past the held gate (here: the memo off) is read bucket
+      // by bucket; a held one answers the same with no job and no file
+      memoOff {
+        val fileDf = spark.sql(q)
+        val read = fileDf.inputFiles.toSet
+        assert(read.nonEmpty && read.size < allIdx.size,
+          "nProbe=2 of 8 cells must read a strict subset of index buckets")
+        assert(fileDf.collect().toSeq == heldRows)
+      }
+      assertHeld(q, heldRows)
       // filtered + probed: still a strict-subset bucket read; a dense
       // predicate (half of every cell matches) fills k from the initial
       // probe, and every returned row satisfies it
-      val fdf = spark.sql(topkSql("vr_cat.analytics.vecs2", arrLit(qv),
-        extra = "WHERE vec_id % 2 = 0"))
+      val fq = topkSql("vr_cat.analytics.vecs2", arrLit(qv),
+        extra = "WHERE vec_id % 2 = 0")
+      val fdf = spark.sql(fq)
       assert(VectorTopKRewrite.served(fdf), "filtered probed serve expected")
-      assert(fdf.inputFiles.toSet.size < allIdx.size,
-        "the filtered probe must keep the bucket-subset read")
+      val fHeld = fdf.collect().toSeq
+      memoOff {
+        val fileDf = spark.sql(fq)
+        val read = fileDf.inputFiles.toSet
+        assert(read.nonEmpty && read.size < allIdx.size,
+          "the filtered probe must keep the bucket-subset read")
+        assert(fileDf.collect().toSeq == fHeld)
+      }
+      assertHeld(fq, fHeld)
       val fRows = fdf.collect().map(_.getLong(0))
       assert(fRows.forall(_ % 2 == 0),
         s"probed filtered serve returned non-matching rows: ${fRows.toSeq}")
