@@ -17,8 +17,7 @@ import graft.store.TableStore
   * physical planning and calls `toRdd`, so whatever the mask plan
   * materializes runs at PLAN time, on every plan of every query. Small
   * masks (under the broadcast gate) are therefore held on the driver per
-  * delete-file set, in the shared memo of small row sets
-  * ([[TableStore.rowMemo]], which also holds small view snapshots), and
+  * delete-file set ([[graft.store.HeldRows]], kind `mask`), and
   * applied inside the scan as one per-row probe shipped as a Spark
   * broadcast ([[graft.store.HeldMaskKeep]]): the first plan over a delete
   * set reads its files, later plans run no Spark job at all. Masks past

@@ -18,8 +18,8 @@ import graft.store.TableStore
   * A view rewrite that answers from a view's stored snapshot reads it
   * through [[read]], an ANN top-k search ([[graft.store.AnnIndex.topk]])
   * its index snapshot through [[relation]]: when the snapshot passes the
-  * gate of [[TableStore#heldSnapshot]] (the shared small-row-set memo,
-  * [[TableStore.rowMemo]]), its rows come from the driver as a
+  * gate of [[graft.store.HeldRows.snapshot]] (held rows, kind `view` or
+  * `index`), its rows come from the driver as a
   * `LocalRelation` tagged with the store's root. [[fold]] then evaluates
   * the Project, Filter, Aggregate, Sort and Limit nodes over those rows at
   * plan time, so the query plans to one `LocalRelation` and `collect()`
@@ -43,7 +43,7 @@ private[graft] object HeldViews {
     * of memo kind `kind`, for a caller that builds its plan over it. */
   def relation(st: TableStore, version: Long,
       kind: String): Option[LocalRelation] =
-    st.heldSnapshot(version, kind).map(rel =>
+    graft.store.HeldRows.snapshot(st, version, kind).map(rel =>
       tagged(rel.newInstance(), st.root))
 
   private def tagged(l: LocalRelation, root: String): LocalRelation = {

@@ -17,16 +17,10 @@ object SketchAggs {
   /** MinHash signature fold: per group, the element-wise minimum of
     * h_i(x) = (a_i·x + b_i) mod P over all shingle hashes x. */
   class MinHashAgg(numHashes: Int) extends Aggregator[Long, Array[Long], Array[Long]] {
-    private val as = LlmCommon.hashParams(numHashes).map(_._1).toArray
-    private val bs = LlmCommon.hashParams(numHashes).map(_._2).toArray
+    private val (as, bs) = LlmCommon.hashParams(numHashes).toArray.unzip
     override def zero: Array[Long] = Array.fill(numHashes)(Long.MaxValue)
     override def reduce(buf: Array[Long], h: Long): Array[Long] = {
-      var i = 0
-      while (i < numHashes) {
-        val v = (h * as(i) + bs(i)) % LlmCommon.MinhashPrime
-        if (v < buf(i)) buf(i) = v
-        i += 1
-      }
+      TextKernels.minhashUpdate(buf, h, as, bs)
       buf
     }
     override def merge(x: Array[Long], y: Array[Long]): Array[Long] = {

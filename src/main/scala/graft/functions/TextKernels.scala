@@ -69,20 +69,22 @@ object TextKernels {
   /** MinHash signature over shingle hashes with the shared (a_i, b_i)
     * universal-hash family. */
   def minhashSig(shs: Array[Long], as: Array[Long], bs: Array[Long]): Array[Long] = {
-    val n = as.length
-    val sig = Array.fill(n)(Long.MaxValue)
+    val sig = Array.fill(as.length)(Long.MaxValue)
     var k = 0
-    while (k < shs.length) {
-      val h = shs(k)
-      var i = 0
-      while (i < n) {
-        val v = (h * as(i) + bs(i)) % LlmCommon.MinhashPrime
-        if (v < sig(i)) sig(i) = v
-        i += 1
-      }
-      k += 1
-    }
+    while (k < shs.length) { minhashUpdate(sig, shs(k), as, bs); k += 1 }
     sig
+  }
+
+  /** Fold shingle hash `h` into signature `sig`: each slot keeps the
+    * minimum of itself and h_i(h) = (a_i·h + b_i) mod P. */
+  def minhashUpdate(sig: Array[Long], h: Long, as: Array[Long],
+      bs: Array[Long]): Unit = {
+    var i = 0
+    while (i < sig.length) {
+      val v = (h * as(i) + bs(i)) % LlmCommon.MinhashPrime
+      if (v < sig(i)) sig(i) = v
+      i += 1
+    }
   }
 
   /** 64-bit SimHash: sign of per-bit votes over token hashes. */

@@ -68,11 +68,10 @@ object AnnIndex {
     * resolve probed cells to bucket ids from metadata, zero plan-time
     * jobs. */
   private val CellBucketsProp = "graft.ann.cell-buckets"
-  /** The largest index version [[topk]] searches on the driver (past it,
-    * and past the [[TableStore#heldSnapshot]] gate, the bucket-targeted
-    * read answers): a quarter of the [[TableStore.rowMemo]] budget, so a
-    * held index leaves the rest to delete masks and views, and the
-    * largest size at which a driver search was measured to beat the
+  /** The largest index version [[topk]] searches on the driver, and the
+    * row budget of the `index` kind of [[HeldRows]] (past it, and past
+    * the [[HeldRows.snapshot]] gate, the bucket-targeted read answers):
+    * the largest size at which a driver search was measured to beat the
     * bucket read at every probe width (NOTES.md "Held ANN search"). */
   private[graft] val HeldMaxRows = 64000L
 
@@ -440,6 +439,12 @@ object AnnIndex {
 
   // -------------------------------------------------------------- query
 
+  /** The index store's latest version, from the registry memo: listed
+    * once per index commit, not once per search. */
+  private def head(idx: TableStore): Long =
+    TableStore.registryCached("annhead", idx)(
+      java.lang.Long.valueOf(idx.currentVersion())).longValue
+
   /** Point top-k: probe the `nProbe` cells nearest the query (a driver-side
     * argsort over the frozen centroids — metadata-sized), read ONLY those
     * cells' index buckets, score map-side, TakeOrdered. Never touches the
@@ -450,8 +455,8 @@ object AnnIndex {
     * key tie-break, the same surface as the in-query ANN entries.
     *
     * A small index version (at most [[HeldMaxRows]] rows, and within the
-    * gate of [[TableStore#heldSnapshot]]) is searched on the driver
-    * instead: its rows are held in [[TableStore.rowMemo]] (kind `index`),
+    * gate of [[HeldRows.snapshot]]) is searched on the driver
+    * instead: its rows are held in [[HeldRows]] (kind `index`),
     * the same probe, filter, score, sort and limit expressions fold over
     * them, and the result is one `LocalRelation` tagged with the index
     * root ([[graft.catalog.HeldViews]]), so `collect()` runs no Spark job.
@@ -485,7 +490,7 @@ object AnnIndex {
     // indexVersion >= 0 pins a VALIDATED snapshot (the SQL rewrite's
     // freshness gate runs before the read — serving a newer index than
     // the gated one would leak rows the scanned base snapshot lacks)
-    val iv = if (indexVersion >= 0) indexVersion else idx.currentVersion()
+    val iv = if (indexVersion >= 0) indexVersion else head(idx)
     require(iv >= 0, s"ANN index '$name' does not exist")
     val im = idx.manifest(iv)
     require(im.props.get(KindProp).contains(KindAnn),
@@ -509,9 +514,7 @@ object AnnIndex {
     // key filter. Each search step is one plan node over them, analyzed
     // once per step: a DataFrame per operator would re-run the analyzer
     // for each, which costs more than scoring a small index on the driver
-    val held =
-      if (im.totalRows > HeldMaxRows) None
-      else graft.catalog.HeldViews.relation(idx, iv, "index")
+    val held = graft.catalog.HeldViews.relation(idx, iv, "index")
     // the plan is analyzed over an empty stand-in for the held rows: each
     // analyzer rule maps every Seq field of the nodes it visits, so over
     // the held relation itself every rule would copy all its rows
@@ -620,7 +623,7 @@ object AnnIndex {
       broadcastBatch: Boolean = true): DataFrame = {
     val s = base.spark
     val idx = SecondaryIndex.indexStore(base, name)
-    val iv = if (indexVersion >= 0) indexVersion else idx.currentVersion()
+    val iv = if (indexVersion >= 0) indexVersion else head(idx)
     require(iv >= 0, s"ANN index '$name' does not exist")
     val im = idx.manifest(iv)
     require(im.props.get(KindProp).contains(KindAnn),

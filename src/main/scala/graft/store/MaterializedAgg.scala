@@ -656,7 +656,7 @@ object MaterializedAgg {
     *    every location in the key).
     *  - the bag rides the registry under the base's memoKey, so any commit
     *    to the base or a store nested under it (view, index) drops it
-    *    ([[TableStore.registryCommitted]]); branch stores skip the memo.
+    *    ([[Memo.committed]]); branch stores skip the memo.
     */
   private[graft] def storedPlusTail(base: TableStore, vm: ViewMeta,
       toV: Long, reuseToken: String = ""): Option[DataFrame] = {

@@ -170,7 +170,7 @@ object MaterializedJoin {
     * per-view listings and a manifest read inside the optimizer's
     * fixpoint — 50-100 ms × O(#views) per query at object-store latency.
     * The snapshot is invalidated by every in-process commit under `l.root`
-    * ([[TableStore.registryCommitted]]) and by drops/DROP TABLE
+    * ([[Memo.committed]]) and by drops/DROP TABLE
     * ([[TableStore.invalidateMeta]]); `spark.graft.meta.registryCache=false`
     * opts out for multi-driver deployments where another process runs the
     * maintenance cadence. */

@@ -10,10 +10,10 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.catalog.{GraftCatalog, VectorTopKRewrite}
-import graft.store.{AnnIndex, SecondaryIndex, TableStore}
+import graft.store.{AnnIndex, HeldRows, SecondaryIndex, TableStore}
 
 /** Held ANN index snapshots: a small index version is held on the driver
-  * ([[TableStore#heldSnapshot]], memo kind `index`) and a top-k search
+  * ([[HeldRows.snapshot]], kind `index`) and a top-k search
   * folds its probe, filters, score, sort and limit over those rows at plan
   * time, so `AnnIndex.topk` and the SQL vector top-k rewrite run no Spark
   * job. Every answer must equal the bucket-targeted file read's (memo
@@ -244,9 +244,8 @@ class HeldAnnSpec extends SparkSuite {
     AnnIndex.create(st, "ann", "embedding", clusters = 6, iters = 2)
     val idx = SecondaryIndex.indexStore(st, "ann")
     val q = embeddings(rnd, centres, 1).head
-    import scala.jdk.CollectionConverters._
-    def held: Seq[String] = TableStore.rowMemo.keySet.asScala.toSeq
-      .filter(k => k._1 == idx.epochMemoKey && k._2 == "index").map(_._3)
+    def held: Seq[String] = HeldRows.kinds("index").snapshot.map(_._1)
+      .filter(_._1 == idx.epochMemoKey).map(_._2)
     AnnIndex.topk(st, "ann", q, 5).collect()
     assert(held == Seq(idx.currentVersion().toString))
     (1 to 3).foreach { i =>
@@ -257,7 +256,7 @@ class HeldAnnSpec extends SparkSuite {
       val iv = idx.currentVersion()
       assert(held == Seq(iv.toString),
         s"refresh $i: held index versions $held")
-      val stats = TableStore.rowMemoStats("index")
+      val stats = HeldRows.stats("index")
       assert(stats.rows >= 200 + i && stats.bytes > 0, stats)
     }
     assert(SecondaryIndex.drop(st, "ann"))
@@ -279,9 +278,7 @@ class HeldAnnSpec extends SparkSuite {
     val jobs = jobsDuring { got = rows(AnnIndex.topk(st, "ann", q, 10)) }
     assert(got == want && got.size == 10)
     val idx = SecondaryIndex.indexStore(st, "ann")
-    import scala.jdk.CollectionConverters._
-    assert(jobs >= 1 && !TableStore.rowMemo.keySet.asScala
-      .exists(_._1 == idx.epochMemoKey),
-      s"$jobs jobs, memo ${TableStore.rowMemoStats}")
+    assert(jobs >= 1 && !HeldRows.kinds.values.exists(_.snapshot
+      .exists(_._1._1 == idx.epochMemoKey)), s"$jobs jobs, memo ${HeldRows.stats}")
   }
 }

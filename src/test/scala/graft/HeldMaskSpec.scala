@@ -3,16 +3,13 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.AttributeReference
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.catalog.{AggViewRewrite, GraftCatalog}
-import graft.store.{MaterializedAgg, TableStore}
+import graft.store.{HeldRows, MaterializedAgg, TableStore}
 
 /** Held delete masks apply as an in-scan probe: a delete set small enough
   * to hold on the driver is turned once into a broadcast lookup, and a
@@ -20,8 +17,8 @@ import graft.store.{MaterializedAgg, TableStore}
   * maps to a newer delete. Planning such a read runs no Spark job. Every
   * answer must equal the file-read anti-join's (memo off) and the
   * shuffled anti-join's (broadcast gate 0), over any history of equality
-  * deletes and delete vectors, for every key type; the shared memo of held
-  * row sets evicts by recency, not wholesale. */
+  * deletes and delete vectors, for every key type; view refreshes leave
+  * the held masks in place ([[MemoSpec]] covers eviction). */
 class HeldMaskSpec extends SparkSuite {
   import spark.implicits._
 
@@ -130,9 +127,8 @@ class HeldMaskSpec extends SparkSuite {
       memoOff(canon(br.readSnapshot().collect())))
   }
 
-  test("row memo: view refreshes keep one held view version and the held " +
-      "masks (maskLoads flat); overflow evicts the least recently used") {
-    TableStore.rowMemo.clear()
+  test("held rows: view refreshes keep one held view version and the masks") {
+    HeldRows.kinds.values.foreach(_.clear())
     val base = store("ev")
     base.commitBucketed(salesRows(1, 200), Seq("id"), 4)
     mask(base, put = 3L, gone = 4L, dv = 5L)
@@ -146,7 +142,7 @@ class HeldMaskSpec extends SparkSuite {
       (canon(spark.sql(point).collect()), df)
     }
     ask()._2.collect()
-    val masks0 = TableStore.rowMemoStats("mask")
+    val masks0 = HeldRows.stats("mask")
     assert(masks0.entries == 2 && masks0.rows > 0 && masks0.bytes > 0)
     val loads0 = TableStore.maskLoads.get()
     (1 to 3).foreach { i =>
@@ -156,39 +152,16 @@ class HeldMaskSpec extends SparkSuite {
       val rows = canon(df.collect())
       assert(pts == Seq("3|3000", "6|12"), pts)
       assert(AggViewRewrite.served(df) && rows.size == 5, rows)
-      val views = TableStore.rowMemoStats("view")
-      import scala.jdk.CollectionConverters._
-      val held = TableStore.rowMemo.keySet.asScala.toSeq
-        .filter(k => k._1 == vs.epochMemoKey && k._2 == "view").map(_._3)
+      val views = HeldRows.stats("view")
+      val held = HeldRows.kinds("view").snapshot.map(_._1)
+        .filter(_._1 == vs.epochMemoKey).map(_._2)
       assert(held == Seq(vs.currentVersion().toString) &&
         views.entries == 1 && views.rows == 5 && views.bytes > 0,
         s"refresh $i: held view versions $held, stats $views")
     }
     assert(TableStore.maskLoads.get() == loads0,
       "view refreshes dropped the held masks")
-    assert(TableStore.rowMemoStats("mask") == masks0)
-
-    // recency: a touched entry outlives older untouched ones
-    val attr = Seq(AttributeReference("x", LongType)())
-    def rel(n: Int) = LocalRelation(attr, Seq.fill(n)(InternalRow(1L)))
-    def key(i: Int) = (s"$warehouse/lru@-", "mask", i.toString)
-    try {
-      TableStore.rowMemo.clear()
-      (1 to 64).foreach(i => TableStore.rowMemoPut(key(i), rel(1)))
-      assert(TableStore.rowMemoGet(key(1)).isDefined)
-      TableStore.rowMemoPut(key(65), rel(1))
-      assert(TableStore.rowMemo.size == 64 &&
-        TableStore.rowMemo.containsKey(key(1)) &&
-        !TableStore.rowMemo.containsKey(key(2)))
-      // rows past the budget evict least recent first until the put fits
-      TableStore.rowMemoPut(key(66),
-        rel(TableStore.MaskMemoMaxRows.toInt - 30))
-      assert(TableStore.rowMemoRows <= TableStore.MaskMemoMaxRows)
-      assert(Seq(1, 37, 64, 65, 66).forall(i =>
-        TableStore.rowMemo.containsKey(key(i))) &&
-        (3 to 36).forall(i => !TableStore.rowMemo.containsKey(key(i))),
-        TableStore.rowMemoStats)
-    } finally TableStore.invalidateMeta(s"$warehouse/lru")
+    assert(HeldRows.stats("mask") == masks0)
   }
 
   test("floating point keys mask as Spark joins them: -0.0 = 0.0, NaN = " +

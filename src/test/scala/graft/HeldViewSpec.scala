@@ -10,15 +10,16 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 
 import graft.catalog.{AggViewRewrite, GraftCatalog}
-import graft.store.{MaterializedAgg, MaterializedJoin, TableStore}
+import graft.store.{HeldRows, MaterializedAgg, MaterializedJoin, TableStore}
 
 /** Held view snapshots: a small view snapshot the aggregate or join rewrite
-  * serves is held on the driver ([[TableStore#heldSnapshot]], the shared
-  * [[TableStore.rowMemo]]) and the rewritten plan folds over its rows at
+  * serves is held on the driver ([[HeldRows.snapshot]], kind `view`) and
+  * the rewritten plan folds over its rows at
   * plan time into one `LocalRelation` — the query runs no Spark job. The
   * fold must answer exactly as the rewrite switched off and as a plain
   * DataFrame over `readSnapshot()`, errors included; the memo must follow
-  * view refreshes and drops and stay inside its row budget. */
+  * view refreshes and drops and stay inside its row budget ([[MemoSpec]]
+  * covers the budget itself). */
 class HeldViewSpec extends SparkSuite {
 
   private lazy val warehouse = {
@@ -345,11 +346,9 @@ class HeldViewSpec extends SparkSuite {
     } finally spark.conf.unset("spark.graft.meta.manifestCache")
   }
 
-  private def heldKeys(st: TableStore): Seq[(String, String, String)] = {
-    import scala.jdk.CollectionConverters._
-    TableStore.rowMemo.keySet.asScala.toSeq
-      .filter(k => k._1 == st.epochMemoKey && k._2 == "view")
-  }
+  private def heldKeys(st: TableStore): Seq[String] =
+    HeldRows.kinds("view").snapshot.map(_._1).filter(_._1 == st.epochMemoKey)
+      .map(_._2)
 
   test("memo lifecycle: a refresh serves the new view version, a drop " +
       "releases the held rows, an over-gate view is not held") {
@@ -369,7 +368,7 @@ class HeldViewSpec extends SparkSuite {
     val (d1, a1) = ask()
     val v1 = vs.currentVersion()
     assert(folded(d1) && AggViewRewrite.served(d1) &&
-      heldKeys(vs).map(_._3) == Seq(v1.toString))
+      heldKeys(vs) == Seq(v1.toString))
     // a base change plus a refresh: the next query answers from the new
     // view version, not from the rows held for the old one
     base.upsertEq(Seq((1L, "g1", 1L, 1000L, "PUT"),
@@ -380,7 +379,7 @@ class HeldViewSpec extends SparkSuite {
     assert(v2 > v1)
     val (d2, a2) = ask()
     assert(a2 != a1 && a2 == rewriteOff(ask()._2) && folded(d2) &&
-      heldKeys(vs).map(_._3).contains(v2.toString),
+      heldKeys(vs).contains(v2.toString),
       s"$a1 -> $a2\n${d2.queryExecution.optimizedPlan}")
     // dropping the view releases every row set held under it
     MaterializedAgg.drop(base, "lcv")
@@ -389,13 +388,13 @@ class HeldViewSpec extends SparkSuite {
 
     // past the row gate: served by Spark from the view files, never held
     val wide = store("wide")
-    val n = TableStore.MaskMemoMaxRows + 1
+    val n = HeldRows.MaxRows + 1
     wide.commitBucketed(spark.range(0, n).selectExpr("id", "id % 7 AS v"),
       Seq("id"), 4)
     MaterializedAgg.create(wide, "by_id", Seq("id"), sumCols = Seq("v"),
       numBuckets = 4)
     val ws = MaterializedAgg.aggStore(wide, "by_id")
-    assert(ws.manifest(ws.currentVersion()).totalRows > TableStore.MaskMemoMaxRows)
+    assert(ws.manifest(ws.currentVersion()).totalRows > HeldRows.MaxRows)
     val wq = "SELECT id % 5 AS b, sum(v) AS s FROM hv_cat.analytics.wide " +
       "GROUP BY id % 5"
     val wdf = spark.sql(wq)
@@ -403,28 +402,6 @@ class HeldViewSpec extends SparkSuite {
     assert(AggViewRewrite.served(wdf) && !folded(wdf) && heldKeys(ws).isEmpty,
       wdf.queryExecution.optimizedPlan.toString)
     assert(wgot == rewriteOff(canon(spark.sql(wq).collect())))
-    assert(TableStore.rowMemoRows <= TableStore.MaskMemoMaxRows)
-  }
-
-  test("memo budget: held rows never exceed the shared row budget") {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    val attr = Seq(AttributeReference("x", LongType)())
-    def rel(n: Int) = LocalRelation(attr, Seq.fill(n)(InternalRow(1L)))
-    val budget = TableStore.MaskMemoMaxRows.toInt
-    def key(v: String) = (s"$warehouse/budget@-", "view", v)
-    try {
-      TableStore.rowMemoPut(key("1"), rel(budget - 10))
-      assert(TableStore.rowMemoRows <= budget)
-      TableStore.rowMemoPut(key("2"), rel(20))
-      assert(TableStore.rowMemoRows <= budget &&
-        TableStore.rowMemo.containsKey(key("2")))
-      TableStore.rowMemoPut(key("3"), rel(budget + 1))
-      assert(TableStore.rowMemoRows <= budget &&
-        !TableStore.rowMemo.containsKey(key("3")))
-      (4 to 80).foreach(i => TableStore.rowMemoPut(key(i.toString), rel(1)))
-      assert(TableStore.rowMemo.size <= 65 &&
-        TableStore.rowMemoRows <= budget)
-    } finally TableStore.invalidateMeta(s"$warehouse/budget")
+    assert(HeldRows.kinds("view").weight <= HeldRows.MaxRows)
   }
 }
