@@ -16,12 +16,13 @@ import graft.store.TableStore
   * masks — and hands Spark its internal-row RDD. `buildScan` runs during
   * physical planning and calls `toRdd`, so whatever the mask plan
   * materializes runs at PLAN time, on every plan of every query. Small
-  * masks (under the broadcast gate) are therefore held on the driver per
+  * masks (under the held gate) are therefore held on the driver per
   * delete-file set ([[graft.store.HeldRows]], kind `mask`), and
   * applied inside the scan as one per-row probe shipped as a Spark
   * broadcast ([[graft.store.HeldMaskKeep]]): the first plan over a delete
   * set reads its files, later plans run no Spark job at all. Masks past
-  * the gate keep the anti-join over their files. The scan also loses
+  * the gate keep the anti-join over their files, unhinted: Spark's join
+  * selection broadcasts or shuffles it. The scan also loses
   * whole-stage fusion with the parent plan (one extra exchange-free
   * pipeline break) until
   * [[TableStore#purgeDeletes]]/[[TableStore#compact]] folds the deletes in

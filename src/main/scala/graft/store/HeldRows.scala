@@ -6,7 +6,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.functions.broadcast
 
 /** Small immutable row sets held on the driver, one [[Memo]] per kind:
   *  - `mask`: delete masks, each with the in-scan probe built from its
@@ -111,27 +110,27 @@ private[graft] object HeldRows {
 
   /** A mask over the delete set `dels` reads, named by `key`.
     * `DvV1Scan.buildScan` plans a masked read at PLAN time, so a mask read
-    * from the files runs a Spark job on every plan. A set under the DV
-    * broadcast threshold is held (kind `mask`) and turned once into the
-    * in-scan `probe` its entry keeps (Left; [[HeldMask]]), and planning
-    * runs no job. Otherwise (Right) the caller anti-joins the rows read
-    * from the files, broadcast-hinted under the byte gate. Every mask
+    * from the files runs a Spark job on every plan. A set within
+    * [[TableStore.BroadcastBytes]] bytes that [[hold]] admits is held
+    * (kind `mask`) and turned once into the in-scan `probe` its entry
+    * keeps (Left; [[HeldMask]]), and planning runs no job. Otherwise
+    * (Right) the caller anti-joins the rows read from the files, and
+    * Spark's own join selection broadcasts or shuffles them. Every mask
     * built from the files counts in [[TableStore.maskLoads]]. */
   def maskProbe[P](st: TableStore, key: String, bytes: Long, rows: Long,
       probe: LocalRelation => P, dels: => DataFrame)
       : Either[Broadcast[P], DataFrame] = {
-    if (bytes > st.dvBroadcastThreshold) {
-      TableStore.maskLoads.incrementAndGet()
-      return Right(dels)
-    }
-    hold(st, "mask", key, rows) {
-      TableStore.maskLoads.incrementAndGet()
-      dels
-    } match {
-      case Some(held) => Left(held.probe(st.spark.sparkContext)(probe))
+    val held =
+      if (bytes > TableStore.BroadcastBytes) None
+      else hold(st, "mask", key, rows) {
+        TableStore.maskLoads.incrementAndGet()
+        dels
+      }
+    held match {
+      case Some(h) => Left(h.probe(st.spark.sparkContext)(probe))
       case None =>
         TableStore.maskLoads.incrementAndGet()
-        Right(broadcast(dels))
+        Right(dels)
     }
   }
 }

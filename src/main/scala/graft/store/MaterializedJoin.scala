@@ -64,6 +64,10 @@ object MaterializedJoin {
   private def idxNameProp(i: Int) = s"graft.join.l-index.$i"
   private val OpCol = "_g_jop"
 
+  /** Dim files at and above which the tail re-join reads the dim
+    * bucket-pruned ([[storedPlusTail]]). */
+  private[graft] val PruneDimMinFiles = 64L
+
   /** One keyed dim side of a join view (create-time spec). */
   final case class Dim(r: TableStore, lKeys: Seq[String],
       rKeys: Seq[String], rCols: Seq[String])
@@ -758,8 +762,8 @@ object MaterializedJoin {
     * The re-join reads every dim BUCKET-PRUNED to the affected rows' key
     * values (the refresh path's economy on the read path — a
     * non-broadcastable dim costs O(touched buckets), not O(dim)) once the
-    * dim holds at least `spark.graft.agg.rewrite.tail.pruneDimMinFiles`
-    * files (default 64); smaller dims skip the plan-time pruning job.
+    * dim holds at least [[PruneDimMinFiles]] files; smaller dims skip the
+    * plan-time pruning job.
     *
     * None = not serveable: span expired/unpunned, fact schema or
     * bucket-layout drift, a re-keyed or column-dropped dim, a map-typed
@@ -1052,7 +1056,6 @@ object MaterializedJoin {
         stored.limit(0).select(vm0.bucketKeys.map(col): _*)))
     val pk = vm0.bucketKeys
     val lAll = lm.schema.fieldNames.toSeq
-    val spark = l.spark
     // The netted-key frames are the RIGHT side of every semi/anti join
     // below, with the (huge) stored view on the left — un-hinted, a
     // disabled/conservative auto-broadcast shuffles the whole view per
@@ -1102,11 +1105,7 @@ object MaterializedJoin {
     // the plan-time bucket-derivation jobs are to run — pruning engages
     // per dim only when the saved read can actually pay (at real scale a
     // dim has thousands of files; a toy dim skips the machinery cleanly)
-    val pruneMinFiles = spark.conf
-      .getOption("spark.graft.agg.rewrite.tail.pruneDimMinFiles")
-      .map(_.toLong).getOrElse(64L)
-    val pruneDimAt: Seq[Boolean] =
-      rms.map(m => m.nFiles >= pruneMinFiles)
+    val pruneDimAt: Seq[Boolean] = rms.map(_.nFiles >= PruneDimMinFiles)
     val pruneDims = pruneDimAt.exists(identity)
     // ---- affected fact rows, all evaluating at snapshot toL -----------
     // `srcBytes` accumulates a PLAN-TIME upper bound on the affected-row

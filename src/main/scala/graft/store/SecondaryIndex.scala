@@ -362,9 +362,7 @@ object SecondaryIndex {
     * driver OOM plus a million-literal `isin` expression tree (ADVICE r7
     * medium). Mirrors `RuntimePruning.MaxRuntimeInValues`' role on the
     * runtime-filter path. */
-  private def fetchKeyCap(base: TableStore): Int =
-    base.spark.conf.getOption("spark.graft.index.fetchKeyCap")
-      .map(_.toInt).getOrElse(10000)
+  private[graft] val FetchKeyCap = 10000
 
   /** Counts driver-side key collections taken by [[lookup]]'s fetch-back —
     * scale tests assert broad lookups leave it untouched. */
@@ -374,7 +372,7 @@ object SecondaryIndex {
     * IN predicates bucket-prune the index read). Covered queries (`wanted`
     * ⊆ index columns) are served from the index alone; otherwise the
     * matched primary keys fetch back into the base. Point-lookup-sized
-    * matches (≤ [[fetchKeyCap]]) collect the keys and bucket-prune the base
+    * matches (≤ [[FetchKeyCap]]) collect the keys and bucket-prune the base
     * read via the IN predicate — two point reads end-to-end. Broader
     * matches never materialize keys on the driver: the touched base-bucket
     * set is computed distributedly (≤ numBuckets longs collected), the base
@@ -396,12 +394,11 @@ object SecondaryIndex {
     else {
       val baseKeys = bm.bucketKeys
       val keyEntries = entries.select(baseKeys.map(col): _*).distinct()
-      val cap = fetchKeyCap(base)
       // limit(cap+1): ≤ cap rows back means this IS the complete key set
-      val keys = keyEntries.limit(cap + 1).collect()
+      val keys = keyEntries.limit(FetchKeyCap + 1).collect()
       if (keys.isEmpty)
         return base.readSnapshot(bm.version).limit(0).select(want.map(col): _*)
-      if (keys.length <= cap) {
+      if (keys.length <= FetchKeyCap) {
         fetchBackKeyCollects.incrementAndGet()
         val inPred = baseKeys.zipWithIndex.map { case (k, i) =>
           col(k).isin(keys.map(_.get(i)).toIndexedSeq: _*)

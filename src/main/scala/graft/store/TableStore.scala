@@ -196,10 +196,10 @@ class TableStore(val spark: SparkSession, val root: String,
       .map(_.toInt).getOrElse(8192)
 
   /** Parquet bloom filters for point-lookup columns
-    * (`spark.graft.bloom.columns` = csv of column names;
-    * `spark.graft.bloom.ndv` = expected distinct values per file, default
-    * 100k). High-cardinality IDs are the case file stats cannot help: every
-    * file's min/max spans the whole domain, so `WHERE id = x` on an
+    * (`spark.graft.bloom.columns` = csv of column names, each sized for
+    * [[TableStore.BloomNdv]] distinct values per file). High-cardinality
+    * IDs are the case file stats cannot help: every file's min/max spans
+    * the whole domain, so `WHERE id = x` on an
     * unclustered column scans the table. A per-row-group bloom (written by
     * parquet-mr, consulted automatically by its row-group filter on the
     * pushed predicate) turns each non-matching file's read into
@@ -213,10 +213,10 @@ class TableStore(val spark: SparkSession, val root: String,
     spark.conf.getOption("spark.graft.bloom.columns") match {
       case None => Map.empty
       case Some(csv) =>
-        val ndv = spark.conf.getOption("spark.graft.bloom.ndv").getOrElse("100000")
         csv.split(',').map(_.trim).filter(_.nonEmpty).flatMap(c => Seq(
           s"parquet.bloom.filter.enabled#$c" -> "true",
-          s"parquet.bloom.filter.expected.ndv#$c" -> ndv)).toMap
+          s"parquet.bloom.filter.expected.ndv#$c" ->
+            TableStore.BloomNdv.toString)).toMap
     }
 
   /** The per-file metadata relation of a snapshot — the unified surface the
@@ -679,11 +679,12 @@ class TableStore(val spark: SparkSession, val root: String,
     * Masks held on the driver ([[HeldRows.maskProbe]]) apply as ONE in-scan
     * predicate ([[HeldMaskKeep]]): planning runs no Spark job and the
     * corpus never shuffles. A mask not held (past
-    * [[dvBroadcastThreshold]] or [[HeldRows.MaxRows]], or with
+    * [[TableStore.BroadcastBytes]] or [[HeldRows.MaxRows]], with a key
+    * type that is not binary-stable, or with
     * `spark.graft.meta.manifestCache=false`) anti-joins the rows read from
-    * its files: broadcast-hinted under the byte gate, shuffled above it
-    * (a broad `deleteMor` must not OOM the driver). `tagged` must carry
-    * `_g_file`/`_g_pos` (see [[tagPos]]). */
+    * its files, unhinted: Spark broadcasts or shuffles them by its own
+    * sizing, so a broad `deleteMor` never lands on the driver whole.
+    * `tagged` must carry `_g_file`/`_g_pos` (see [[tagPos]]). */
   private def maskFilter(tagged: DataFrame, m: Manifest): DataFrame = {
     import org.apache.spark.sql.functions.col
     val dv = if (m.hasDvs) Some(dvProbe(m.dvRefs)) else None
@@ -776,18 +777,6 @@ class TableStore(val spark: SparkSession, val root: String,
   private[graft] def dvEntries(m: Manifest): DataFrame =
     spark.read.schema(TableStore.DvSchema).parquet(m.dvRefs.map(_.path): _*)
 
-  /** Above this many DV bytes (manifest `dvRefs` totals — the decision is
-    * metadata-only) the read-side anti-join is NOT broadcast-hinted: a
-    * single broad `deleteMor` (`WHERE date < X` over 10% of a 100 TB table)
-    * writes billions of `(file, pos)` entries in one commit, and a forced
-    * broadcast would pull them onto the driver and every executor
-    * regardless of `autoBroadcastJoinThreshold` (ADVICE r7 medium). Below
-    * it — the CDC-trickle steady state bounded by
-    * `CdcMaintenance.maxDvFiles` — the hint keeps the corpus un-shuffled. */
-  private[store] def dvBroadcastThreshold: Long =
-    spark.conf.getOption("spark.graft.dv.broadcastThreshold")
-      .map(_.toLong).getOrElse(TableStore.BroadcastBytes)
-
   /** The keys of the equality deletes `refs` over `cols`, collapsed to
     * `max(since)` per key — the probe side of [[maskFilter]] and of the
     * narrow changelog's newly-masked filter. Held keys are compared as
@@ -836,8 +825,7 @@ class TableStore(val spark: SparkSession, val root: String,
     * contract). One distributed O(DV entries) pass recomputes per-ref
     * live-entry counts under `keep` (an entry-level predicate over
     * `file_path`); refs left with zero live entries are dropped. Ref byte
-    * sizes keep the on-disk value — the broadcast gate stays
-    * conservative. */
+    * sizes keep the on-disk value — the held gate stays conservative. */
   private def rebindDvRefs(pm: Manifest,
       keep: org.apache.spark.sql.Column): Seq[DvRef] = {
     import org.apache.spark.sql.functions._
@@ -2079,8 +2067,6 @@ class TableStore(val spark: SparkSession, val root: String,
     // measured +30% on the sf1 upsertEq probe), and only a genuinely
     // broad key set pays the second write — which is O(keys) like the
     // first.
-    val cap = spark.conf.getOption("spark.graft.eq.rowsPerFile")
-      .map(_.toLong).getOrElse(1L << 20)
     // repartition(1), NOT coalesce(1) (VERDICT r17 wrong #1): coalesce
     // collapses the callers' distinct's FINAL aggregate into the single
     // write task — the dedup itself serializes (one task, N-1 cores idle;
@@ -2092,6 +2078,7 @@ class TableStore(val spark: SparkSession, val root: String,
     var files = listDataFiles(eqDir)
     var stats = FileStats.collect(spark, files, keys.schema)
     val total = files.map(stats(_).rows).sum
+    val cap = TableStore.EqRowsPerFile
     if (total > cap) {
       val nShards = math.max(1L, (total + cap - 1) / cap).toInt
       keys.repartition(nShards).write.mode(SaveMode.Overwrite)
@@ -2266,7 +2253,7 @@ class TableStore(val spark: SparkSession, val root: String,
     val eqBuckets: Seq[Long] =
       if (!pm.hasEqDeletes) Nil
       else {
-        import org.apache.spark.sql.functions.{broadcast, col}
+        import org.apache.spark.sql.functions.col
         val (prefixEq, fullEq) = pm.eqRefs.partition(r =>
           r.cols.nonEmpty && r.cols != pm.bucketKeys)
         val full: Seq[Long] =
@@ -2280,12 +2267,8 @@ class TableStore(val spark: SparkSession, val root: String,
             val dels = refs.map(r => spark.read
               .schema(eqKeySchema(pm, cols)).parquet(r.path))
               .reduce(_ unionByName _).distinct()
-            val probe =
-              if (refs.map(_.bytes).sum <= dvBroadcastThreshold)
-                broadcast(dels)
-              else dels
             rawUnmaskedRead(pm).select(pm.bucketKeys.map(col): _*)
-              .join(probe, cols, "left_semi")
+              .join(dels, cols, "left_semi")
               .select(bucketExpr(pm.bucketKeys, pm.numBuckets).as("b"))
               .distinct().as[Long].collect().toSeq
           }
@@ -4423,8 +4406,17 @@ object TableStore {
   private[graft] val ExactMaxFiles = 200000L
 
   /** Broadcast cap of the join view's re-join frames and key sets, and the
-    * default of `spark.graft.dv.broadcastThreshold`. */
+    * byte gate of held delete masks ([[HeldRows.maskProbe]]) and held
+    * snapshots ([[HeldRows.snapshot]]). */
   private[graft] val BroadcastBytes: Long = 64L << 20
+
+  /** Expected distinct values per file of each bloom column
+    * (`spark.graft.bloom.columns`). */
+  private[graft] val BloomNdv = 100000
+
+  /** Rows per equality-delete file: a larger key set re-shards its write
+    * ([[writeEqRows]]). */
+  private[graft] val EqRowsPerFile: Long = 1L << 20
 
   /** Share of a target's files a span may change before the derivative
     * refreshes and the stale-serving routers price it as a rescan
@@ -4686,10 +4678,10 @@ object TableStore {
     if (!ok || bound.isEmpty) None
     else if (nonNull.values.exists(_.isEmpty)) Some((cols, Nil))
     // Cap the cartesian product like every other driver-side IN surface
-    // (RuntimePruning.MaxRuntimeInValues, the GSI fetchKeyCap): two 10k-
-    // value IN lists would otherwise build 100M driver tuples. Above the
-    // cap, decline — the positional path handles the same predicate in
-    // bounded memory.
+    // (RuntimePruning.MaxRuntimeInValues, SecondaryIndex.FetchKeyCap):
+    // two 10k-value IN lists would otherwise build 100M driver tuples.
+    // Above the cap, decline — the positional path handles the same
+    // predicate in bounded memory.
     else if (nonNull.values.map(_.size.toLong).product > 10000L) None
     else Some((cols, cols.map(nonNull)
       .foldLeft(Seq(Seq.empty[Any]))((acc, vs) => acc.flatMap(c =>

@@ -38,12 +38,7 @@ class ConfKeysSpec extends AnyFunSuite {
     // fixture-pinned: the oracle fixtures set these to reach a route
     "spark.graft.agg.refresh.rescanFraction",
     "spark.graft.manifest.inlineThreshold",
-    // test seams: tests set these to reach a path at toy scale
-    "spark.graft.agg.rewrite.tail.pruneDimMinFiles",
-    "spark.graft.bloom.ndv",
-    "spark.graft.dv.broadcastThreshold",
-    "spark.graft.eq.rowsPerFile",
-    "spark.graft.index.fetchKeyCap",
+    // test seam: the sharded specs need several shards from a few files
     "spark.graft.manifest.filesPerShard")
 
   private val keyLiteral = "\"(spark\\.graft\\.[A-Za-z0-9_.]*[A-Za-z0-9_])".r
@@ -56,7 +51,7 @@ class ConfKeysSpec extends AnyFunSuite {
     val found = files.flatMap { p: Path =>
       keyLiteral.findAllMatchIn(Files.readString(p)).map(_.group(1))
     }.toSet
-    assert(expected.size == 26)
+    assert(expected.size == 21)
     assert((found -- expected).isEmpty,
       s"keys read but not pinned: ${(found -- expected).toSeq.sorted}")
     assert((expected -- found).isEmpty,

@@ -367,17 +367,16 @@ class EqualityDeleteSpec extends SparkSuite {
   }
 
   test("large key-set deletes shard the eq file write") {
-    spark.conf.set("spark.graft.eq.rowsPerFile", "1000")
-    try {
-      val store = freshStore()
-      store.commitBucketed(baseDf(10000), keys = Seq("k"), numBuckets = 8)
-      store.deleteEq(spark.range(5000).select(col("id").as("k")))
-      val m = store.manifest(store.currentVersion())
-      assert(m.eqRefs.size > 1,
-        s"5000-key delete wrote ${m.eqRefs.size} eq file(s) under a 1000-row cap")
-      assert(m.eqDeleteRows == 5000)
-      assert(store.readSnapshot().count() == 5000)
-    } finally spark.conf.unset("spark.graft.eq.rowsPerFile")
+    val store = freshStore()
+    store.commitBucketed(baseDf(10000), keys = Seq("k"), numBuckets = 8)
+    // keys 5000.. : half the base plus a tail past it, over the file cap
+    val n = TableStore.EqRowsPerFile + 1000L
+    store.deleteEq(spark.range(5000L, 5000L + n).select(col("id").as("k")))
+    val m = store.manifest(store.currentVersion())
+    assert(m.eqRefs.size > 1, s"$n-key delete wrote ${m.eqRefs.size} eq " +
+      s"file(s) under a ${TableStore.EqRowsPerFile}-row cap")
+    assert(m.eqDeleteRows == n)
+    assert(store.readSnapshot().count() == 5000)
   }
 
   test("raw path export refuses an equality-masked snapshot") {

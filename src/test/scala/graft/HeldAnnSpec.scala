@@ -32,11 +32,6 @@ class HeldAnnSpec extends SparkSuite {
   private def store(name: String) =
     new TableStore(spark, s"$warehouse/analytics/$name")
 
-  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally kvs.foreach { case (k, _) => spark.conf.unset(k) }
-  }
-
   private def memoOff[T](body: => T): T =
     withConf("spark.graft.meta.manifestCache" -> "false")(body)
 

@@ -15,10 +15,11 @@ import graft.store.{HeldRows, MaterializedAgg, TableStore}
   * to hold on the driver is turned once into a broadcast lookup, and a
   * masked read keeps a row unless its `(file, pos)` is deleted or its key
   * maps to a newer delete. Planning such a read runs no Spark job. Every
-  * answer must equal the file-read anti-join's (memo off) and the
-  * shuffled anti-join's (broadcast gate 0), over any history of equality
-  * deletes and delete vectors, for every key type; view refreshes leave
-  * the held masks in place ([[MemoSpec]] covers eviction). */
+  * answer must equal the file-read anti-join's, both as Spark broadcasts
+  * it (memo off) and as it shuffles it (memo off, auto-broadcast off),
+  * over any history of equality deletes and delete vectors, for every
+  * key type; view refreshes leave the held masks in place ([[MemoSpec]]
+  * covers eviction). */
 class HeldMaskSpec extends SparkSuite {
   import spark.implicits._
 
@@ -43,16 +44,12 @@ class HeldMaskSpec extends SparkSuite {
       case x => String.valueOf(x)
     }.mkString("|")).sorted.toSeq
 
-  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally kvs.foreach { case (k, _) => spark.conf.unset(k) }
-  }
-
   private def memoOff[T](body: => T): T =
     withConf("spark.graft.meta.manifestCache" -> "false")(body)
 
   private def shuffled[T](body: => T): T =
-    withConf("spark.graft.dv.broadcastThreshold" -> "0")(body)
+    withConf("spark.graft.meta.manifestCache" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 
   private def usesHeldProbe(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.toString.contains("held_mask")
@@ -178,8 +175,15 @@ class HeldMaskSpec extends SparkSuite {
     assert(usesHeldProbe(held))
     val got = canon(held.collect())
     assert(got == Seq("1.5|4", "null|5"), got)
-    assert(memoOff(canon(st.readSnapshot().collect())) == got)
-    assert(shuffled(canon(st.readSnapshot().collect())) == got)
+    // the file-read anti-join, as Spark broadcasts it and as it shuffles it
+    def joined(): (Seq[String], String) = {
+      val df = st.readSnapshot()
+      (canon(df.collect()), df.queryExecution.executedPlan.toString)
+    }
+    val (bcast, bcastPlan) = memoOff(joined())
+    assert(bcast == got && bcastPlan.contains("BroadcastHashJoin"), bcastPlan)
+    val (smj, smjPlan) = shuffled(joined())
+    assert(smj == got && smjPlan.contains("SortMergeJoin"), smjPlan)
   }
 
   // ---- probe parity over generated histories

@@ -405,17 +405,18 @@ class MaterializedJoinSpec extends SparkSuite {
 
   test("TAIL: dim churn serves exactly through the lockstep index (new " +
       "dim keys included) and the re-join bucket-prunes the dim read") {
-    // the file-count gate skips pruning for toy dims; force it on so the
-    // pruned plan SHAPE is pinned here
-    spark.conf.set("spark.graft.agg.rewrite.tail.pruneDimMinFiles", "1")
-    val (fact, dim, vm, allDim) = try {
+    // one dim-churn tail over a dim of `buckets` buckets holding keys
+    // 0..35 plus `pad` keys no fact row references (they only add files);
+    // returns the dim's file count and the dim files the re-join read,
+    // next to all of them
+    def churnTail(buckets: Int, pad: Int): (Long, Set[String], Set[String]) = {
       val (fact, dim) = fresh()
       fact.commitBucketed((1L to 300L).map(i =>
         (i, i % 40, i * 10)).toDF("id", "fk", "amt"), Seq("id"), 8)
       // dim covers only 0..35: fact rows with fk 36..39 are inner-unmatched
       // and ABSENT from the stored view
-      dim.commitBucketed((0L to 35L).map(k =>
-        (k, s"a$k")).toDF("k", "attr"), Seq("k"), 16)
+      dim.commitBucketed(((0L to 35L) ++ (1000L until 1000L + pad)).map(k =>
+        (k, s"a$k")).toDF("k", "attr"), Seq("k"), buckets)
       MaterializedJoin.create(fact, "jv", dim, Seq("fk"), Seq("k"),
         Seq("attr"))
       val idxSt = SecondaryIndex.indexStore(fact, "join-jv")
@@ -435,24 +436,26 @@ class MaterializedJoinSpec extends SparkSuite {
       // a READ path commits nothing — view and index stores untouched
       assert(MaterializedJoin.viewStore(fact, "jv").currentVersion() == vvB
         && idxSt.currentVersion() == ivB)
-      // the re-join reads a strict subset of the dim's files (the changed
-      // keys' buckets), not the whole dim — the refresh economy on the
-      // read path (VERDICT r10 missing #3)
-      val dimFiles = t.frame.inputFiles.filter(_.contains("/dim")).toSet
-      val allDim = dim.readSnapshot().inputFiles.toSet
-      assert(dimFiles.nonEmpty && dimFiles.subsetOf(allDim) &&
-        dimFiles.size < allDim.size,
-        s"tail re-join must bucket-prune the dim: read ${dimFiles.size} " +
-          s"of ${allDim.size}")
-      (fact, dim, vm, allDim)
-    } finally spark.conf.unset("spark.graft.agg.rewrite.tail.pruneDimMinFiles")
-    // at the default file-count gate this toy dim is below it: the
-    // re-join reads every dim file and stays exact
-    val t2 = MaterializedJoin.storedPlusTail(fact, vm,
-      fact.currentVersion(), Seq(dim.currentVersion())).get
-    assert(canon(t2.frame.select(col("id"), col("fk"), col("amt"),
-      col("attr"))) == recompute(fact, dim, "inner"))
-    assert(t2.frame.inputFiles.filter(_.contains("/dim")).toSet == allDim,
+      (dim.manifest(dim.currentVersion()).nFiles.toLong,
+        t.frame.inputFiles.filter(_.contains("/dim")).toSet,
+        dim.readSnapshot().inputFiles.toSet)
+    }
+    // at the file-count gate the re-join reads a strict subset of the
+    // dim's files (the changed keys' buckets), not the whole dim — the
+    // refresh economy on the read path (VERDICT r10 missing #3)
+    val (bigFiles, pruned, bigDim) = churnTail(buckets = 64, pad = 2000)
+    assert(bigFiles >= MaterializedJoin.PruneDimMinFiles,
+      s"fixture error: the dim holds only $bigFiles files")
+    assert(pruned.nonEmpty && pruned.subsetOf(bigDim) &&
+      pruned.size < bigDim.size,
+      s"tail re-join must bucket-prune the dim: read ${pruned.size} " +
+        s"of ${bigDim.size}")
+    // below the gate the dim skips the plan-time pruning job: the re-join
+    // reads every dim file and stays exact
+    val (smallFiles, whole, smallDim) = churnTail(buckets = 16, pad = 0)
+    assert(smallFiles < MaterializedJoin.PruneDimMinFiles,
+      s"fixture error: the dim holds $smallFiles files")
+    assert(whole == smallDim,
       "below the file-count gate the re-join must read the whole dim")
   }
 

@@ -35,15 +35,6 @@ class RuntimeFilterSpec extends SparkSuite {
       .toDF("k", "tag"))
   }
 
-  private def withConfs(kvs: (String, String)*)(body: => Unit): Unit = {
-    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private def starJoin(): DataFrame = spark.sql(
     s"""SELECT f.l_orderkey, f.l_quantity, d.tag
        |FROM $cat.a.fact f JOIN $cat.a.dim d ON f.l_orderkey = d.k
@@ -66,7 +57,7 @@ class RuntimeFilterSpec extends SparkSuite {
   test("star join runtime-prunes the bucketed fact scan to the dim keys' buckets") {
     setup
     var expect: Seq[(Long, Double, String)] = null
-    withConfs(dppOn :+
+    withConf(dppOn :+
       ("spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "false"): _*) {
       val df = starJoin()
       import spark.implicits._
@@ -75,7 +66,7 @@ class RuntimeFilterSpec extends SparkSuite {
       assert(factFilesPlanned() == nBuckets,
         s"DPP off: full fact scan expected, planned ${factFilesPlanned()}")
     }
-    withConfs(dppOn: _*) {
+    withConf(dppOn: _*) {
       val df = starJoin()
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("dynamicpruning") || plan.contains("RuntimeFilters"),
@@ -92,7 +83,7 @@ class RuntimeFilterSpec extends SparkSuite {
 
   test("runtime pruning composes with storage-partitioned joins (key-grouped scan)") {
     setup
-    withConfs(dppOn ++ Seq(
+    withConf(dppOn ++ Seq(
       "spark.sql.sources.v2.bucketing.enabled" -> "true"): _*) {
       val df = starJoin()
       import spark.implicits._
@@ -109,7 +100,7 @@ class RuntimeFilterSpec extends SparkSuite {
     // both wraps engaged (SPJ conf on + runtime-prunable): the scan must
     // still forward the parquet scan's size estimate — losing it re-prices
     // the dim at defaultSizeInBytes and the join falls back to shuffle
-    withConfs("spark.sql.sources.v2.bucketing.enabled" -> "true") {
+    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true") {
       val dimB = new TableStore(spark, s"$wh/a/dimb")
       if (dimB.currentVersion() < 0) {
         import spark.implicits._

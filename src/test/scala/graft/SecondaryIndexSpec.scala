@@ -80,25 +80,30 @@ class SecondaryIndexSpec extends SparkSuite {
   }
 
   test("broad fetch-back stays distributed above the key cap") {
+    val cap = SecondaryIndex.FetchKeyCap
     val base = freshStore()
-    base.commitBucketed(baseRows(500), Seq("id"), 8)
+    // 17 customers over cap + 1700 ids: the three-customer predicate
+    // matches fewer keys than the cap, the fifteen-customer one more
+    base.commitBucketed(baseRows(cap + 1700), Seq("id"), 8)
     SecondaryIndex.create(base, "by_cust", Seq("cust"), numBuckets = 4)
-    val pred = col("cust").isin("cust_3", "cust_11")
-    // collect-path answer first (default cap ≫ matches)
-    val expect = canon(SecondaryIndex.lookup(base, "by_cust", pred))
-    assert(expect == canon(base.readSnapshot().filter(pred)))
-    // now force the cap below the ~59 matched keys: the fetch-back must
-    // switch to the distributed semi-join — zero driver key collections,
-    // identical result
-    SecondaryIndex.fetchBackKeyCollects.set(0L)
-    spark.conf.set("spark.graft.index.fetchKeyCap", "10")
-    try {
+    def lookup(custs: Int): (Long, Long) = {
+      val pred = col("cust").isin((0 until custs).map(c => s"cust_$c"): _*)
+      val want = canon(base.readSnapshot().filter(pred))
+      SecondaryIndex.fetchBackKeyCollects.set(0L)
       val out = SecondaryIndex.lookup(base, "by_cust", pred)
-      assert(canon(out) == expect,
-        "distributed fetch-back must match the collect path")
-      assert(SecondaryIndex.fetchBackKeyCollects.get() == 0L,
-        "broad lookup collected primary keys to the driver")
-    } finally spark.conf.unset("spark.graft.index.fetchKeyCap")
+      assert(canon(out) == want,
+        s"fetch-back over $custs customers must match the filtered read")
+      (want.size.toLong, SecondaryIndex.fetchBackKeyCollects.get())
+    }
+    // narrow: the matched keys are collected and bucket-prune the base
+    val (narrow, narrowCollects) = lookup(3)
+    assert(narrow > 0 && narrow <= cap && narrowCollects == 1L)
+    // broad: past the cap the fetch-back switches to the distributed
+    // semi-join — zero driver key collections, identical result
+    val (broad, broadCollects) = lookup(15)
+    assert(broad > cap, s"fixture error: only $broad keys matched")
+    assert(broadCollects == 0L,
+      "broad lookup collected primary keys to the driver")
   }
 
   test("index_lookup_view: SQL surface for the non-covered fetch-back") {

@@ -19,6 +19,18 @@ abstract class SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sfDir = "/root/testdata/sf0.001"
 
+  /** Runs `body` with the session confs `kvs` set, then restores each
+    * key's prior value (or unsets it), so no test leaves a key set on the
+    * shared session. */
+  protected def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Job ids started while `body` runs, fenced by two marker jobs: the
     * listener bus delivers in order, so once the closing marker's start
     * is seen every job of `body` has been counted. */

@@ -31,15 +31,6 @@ class SpjSpec extends SparkSuite {
       .select("l_orderkey", "l_quantity"), Seq("l_orderkey"), 16)
   }
 
-  private def withConfs(kvs: (String, String)*)(body: => Unit): Unit = {
-    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private def joinDf(right: String): DataFrame = spark.sql(
     s"""SELECT o.o_orderkey, o.o_totalprice, l.l_quantity
        |FROM $cat.a.ob o JOIN $cat.a.$right l
@@ -52,7 +43,7 @@ class SpjSpec extends SparkSuite {
   test("co-bucketed join plans with zero exchanges under v2 bucketing") {
     setup
     var spjRows: Array[org.apache.spark.sql.Row] = null
-    withConfs(noBroadcast :+
+    withConf(noBroadcast :+
       ("spark.sql.sources.v2.bucketing.enabled" -> "true"): _*) {
       val df = joinDf("lb")
       val p = df.queryExecution.executedPlan.toString
@@ -63,7 +54,7 @@ class SpjSpec extends SparkSuite {
     }
     // v2 bucketing off (its Spark 4 default is ON): same result through
     // real shuffles, and the scan reverts to the stock parquet plan
-    withConfs(noBroadcast :+
+    withConf(noBroadcast :+
       ("spark.sql.sources.v2.bucketing.enabled" -> "false"): _*) {
       val df = joinDf("lb")
       val p = df.queryExecution.executedPlan.toString
@@ -76,7 +67,7 @@ class SpjSpec extends SparkSuite {
 
   test("mismatched bucket counts fall back to shuffle, same result") {
     setup
-    withConfs(noBroadcast :+
+    withConf(noBroadcast :+
       ("spark.sql.sources.v2.bucketing.enabled" -> "true"): _*) {
       val df = joinDf("lb16")
       val p = df.queryExecution.executedPlan.toString
@@ -101,7 +92,7 @@ class SpjSpec extends SparkSuite {
         org.apache.spark.sql.functions.col("o_orderkey") ===
           org.apache.spark.sql.functions.col("l_orderkey"))
       .collect().map(r => (r.getLong(0), r.getDouble(2))).sorted
-    withConfs(noBroadcast ++ Seq(
+    withConf(noBroadcast ++ Seq(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.shuffle.enabled" -> "true"): _*) {
       val df = spark.sql(
@@ -130,7 +121,7 @@ class SpjSpec extends SparkSuite {
     // shuffle — at 100 TB a full-table GROUP BY on the table key becomes
     // a map-only pass.
     setup
-    withConfs("spark.sql.sources.v2.bucketing.enabled" -> "true") {
+    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true") {
       val df = spark.sql(
         s"SELECT o_orderkey, COUNT(*) AS n FROM $cat.a.ob GROUP BY o_orderkey")
       val p = df.queryExecution.executedPlan.toString
@@ -143,7 +134,7 @@ class SpjSpec extends SparkSuite {
 
   test("single-table scan under v2 bucketing still reads all rows") {
     setup
-    withConfs("spark.sql.sources.v2.bucketing.enabled" -> "true") {
+    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true") {
       val n = spark.sql(s"SELECT * FROM $cat.a.lb").count()
       assert(n == Tables.load(spark, sfDir, "lineitem").count())
     }

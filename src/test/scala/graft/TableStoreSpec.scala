@@ -878,9 +878,7 @@ class TableStoreSpec extends SparkSuite {
   }
 
   test("bloom write options stamp real, discriminating blooms on every commit path") {
-    spark.conf.set("spark.graft.bloom.columns", "s")
-    spark.conf.set("spark.graft.bloom.ndv", "1000")
-    try {
+    withConf("spark.graft.bloom.columns" -> "s") {
       val store = freshStore()
       // bucketed commit + append: both write paths must carry the option
       store.commitBucketed((1L to 50L).map(k => (k, s"id-$k")).toDF("k", "s"),
@@ -902,9 +900,6 @@ class TableStoreSpec extends SparkSuite {
       plain.commitSnapshot(Seq((1L, "x")).toDF("k", "s"))
       assert(graft.store.FileStats.bloomOfColumn(
         plain.manifest(0).inlineFiles.head, conf, "s").isEmpty)
-    } finally {
-      spark.conf.unset("spark.graft.bloom.columns")
-      spark.conf.unset("spark.graft.bloom.ndv")
     }
   }
 
@@ -1134,29 +1129,34 @@ class TableStoreSpec extends SparkSuite {
     assert(down.length == 10 && down.forall(_.getString(0) == "DELETE"))
   }
 
-  test("oversized DV sets drop the broadcast hint; gated path stays exact") {
+  test("an unheld DV mask carries no broadcast hint; Spark sizes the " +
+      "join, exact") {
     val store = freshStore()
     store.commitBucketed(
       (1L to 1000L).map(k => (k, s"v$k")).toDF("k", "v"), Seq("k"), 8)
     store.deleteMor(col("k") % 3 === 0)
-    // default threshold: hinted broadcast path — the steady-state plan
-    val expected = store.readSnapshot().collect().toSet
-    // gate every DV set out of broadcast; kill Spark's own auto-broadcast so
-    // the plan shape proves the HINT is gone (not just below auto threshold)
-    spark.conf.set("spark.graft.dv.broadcastThreshold", "0")
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val df = store.readSnapshot()
+    // the held in-scan probe: the steady-state plan
+    val held = store.readSnapshot()
+    assert(held.queryExecution.optimizedPlan.toString.contains("held_mask"))
+    val expected = held.collect().toSet
+    assert(expected.size == 667)
+    def plan(df: org.apache.spark.sql.DataFrame): String = {
       assert(df.collect().toSet == expected,
-        "gated anti-join must be content-identical to the broadcast path")
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastExchange"),
-        s"DV anti-join still force-broadcast above the size gate:\n$plan")
-    } finally {
-      spark.conf.unset("spark.graft.dv.broadcastThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+        "file-read anti-join must be content-identical to the held probe")
+      df.queryExecution.executedPlan.toString
     }
+    // memo off: the mask is read from its files; with Spark's own
+    // auto-broadcast off too, the plan proves no hint forces a broadcast
+    val shuffled = withConf("spark.graft.meta.manifestCache" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(
+      plan(store.readSnapshot()))
+    assert(!shuffled.contains("BroadcastExchange"),
+      s"unheld DV anti-join still force-broadcast:\n$shuffled")
+    // at Spark's defaults the same small mask still broadcasts
+    val auto = withConf("spark.graft.meta.manifestCache" -> "false")(
+      plan(store.readSnapshot()))
+    assert(auto.contains("BroadcastExchange"),
+      s"a small unheld DV mask no longer broadcasts:\n$auto")
   }
 
   test("COW commits over a DV'd snapshot re-count inherited DV refs — no dangling entries") {
